@@ -93,23 +93,6 @@ def _calibration(spark) -> dict:
     }
 
 
-def _operator_state_dirty() -> bool:
-    """True when a previous invocation left operator-held DATA alive —
-    persisted pins, the dedup memo caches, star-contraction checkpoints.
-    Such state is a materialized intermediate keyed on the testdata; letting
-    it survive into the next timed run would measure cache reads instead of
-    compute (VERDICT r13 "What's wrong" #1 — the r12/r13 warm numbers for
-    ~10 dedup queries did exactly that)."""
-    from iceberg_trino_sql_demo_spark.operators import dedup, pins
-
-    return bool(
-        pins.pinned_groups()
-        or dedup._HASHED_SH_CACHE
-        or dedup._PREF_CACHE
-        or dedup._STAR_CHECKPOINT_RDDS
-    )
-
-
 def main() -> None:
     spark = get_spark("bench")
     names = sorted(n for n in _ops.QUERIES if n not in _ops.NO_BENCH)
@@ -121,21 +104,9 @@ def main() -> None:
         fn = _ops.QUERIES[name]
         runs = []
         while True:
-            # MEASUREMENT FIX (r14, VERDICT r13 next-round #1): no operator
-            # intermediate may survive across timed runs.  When the previous
-            # run (of this query or an earlier one) left persisted frames or
-            # memoized pipelines behind, release EVERYTHING — pins, dedup
-            # memo caches, prepared plans (a cached plan would skip the
-            # operator body and re-execute against nothing, silently
-            # recomputing shared frames per consumer branch instead of
-            # rebuilding + re-pinning them once) — so this run derives every
-            # intermediate from the parquet inputs inside the timed region.
-            # Queries that hold no such state keep prepared-plan reuse only:
-            # a plan is not data, and the warm in-process DuckDB baseline
-            # re-plans per execution too.  The drain itself runs OUTSIDE the
-            # timed region (it is cleanup of the previous run).
-            if _operator_state_dirty():
-                _ops.release_caches()
+            # every timed run derives its intermediates from the parquet
+            # inputs: release the previous run's pins OUTSIDE the timer
+            _ops.release_caches()
             t0 = time.perf_counter()
             df = fn(spark, SF_DIR)
             df.write.format("noop").mode("overwrite").save()

@@ -9,15 +9,21 @@ runs over the same parquet tables; the driver hash-compares both results
 (order-insensitive), so computed columns must be aliased identically on both
 sides and floating aggregates must be made deterministic (see
 functions.trino.decimal_sum).
+
+Each ``QUERIES`` call builds its plan afresh; nothing carries over from
+one registered query to the next.  The frames an operator persists (and
+dedup's local checkpoints) are released when the next registered query
+starts or when ``release_caches()`` is called (operators/pins.py).
 """
 
 from __future__ import annotations
 
 import functools
-import os
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
+
+from iceberg_trino_sql_demo_spark.operators import pins
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
@@ -27,99 +33,31 @@ ORACLE: dict[str, str] = {}
 #: their time building scratch tables, not executing the measured query)
 NO_BENCH: set[str] = set()
 
-#: prepared-plan cache: (session token, sf_dir, data fingerprint, query
-#: name) -> the DataFrame built on the first invocation.  A resident engine
-#: amortizes parse/analyze/optimize/codegen across repeated executions of
-#: the same statement (every warehouse engine keeps a prepared-statement or
-#: plan cache); Spark re-derives the whole Catalyst pipeline every time a
-#: DataFrame is rebuilt, and for the wide dedup aggregates that analysis
-#: dominates warm wall-time (measured: simhash 2.2 s per invocation vs
-#: 0.3 s re-executing the same DataFrame).  Returning the SAME DataFrame
-#: object re-executes the query per action (no result caching — values are
-#: recomputed), it only reuses the analyzed plan.  The key carries the
-#: max parquet mtime under sf_dir so a regenerated corpus (this driver does
-#: that mid-round) invalidates, and the session token so a new session
-#: never sees a dead session's plan.
-_PLAN_CACHE: dict[tuple, DataFrame] = {}
 
-#: LRU bound on resident prepared plans: each entry keeps a full analyzed/
-#: optimized Catalyst tree alive in the driver JVM — for the wide dedup
-#: aggregates those trees (and the executed broadcast blocks they keep
-#: reachable) are driver-heap weight.  Measured on the 203-query vanilla
-#: sweep at the default 1 GiB heap: 64 resident plans OOM'd the JVM at
-#: query ~91 (reproducibly, pins already bounded, UI retention off — the
-#: plan trees were the accumulator); 4 plans completes all 203 with zero
-#: failures and no manual drains (VERDICT r8 #7).  Big heaps keep 64 so
-#: warm bench reruns never re-analyze.  None = derive from the session
-#: heap at first insertion; set the attr (or the env var) to force.
-_PLAN_CACHE_MAX: int | None = (
-    int(os.environ["SPARK_GRAFT_PLAN_CACHE_MAX"])
-    if os.environ.get("SPARK_GRAFT_PLAN_CACHE_MAX") else None
-)
+def _scoped(fn: QueryFn) -> QueryFn:
+    """The registry entry point: release the previous query's
+    intermediates (operators/pins.py), then build this query."""
 
-
-def _plan_cache_cap(spark: SparkSession) -> int:
-    if _PLAN_CACHE_MAX is not None:
-        return _PLAN_CACHE_MAX
-    heap = int(spark.sparkContext._jvm.Runtime.getRuntime().maxMemory())
-    return 4 if heap <= (4 << 30) else 64
-
-
-def _data_fingerprint(sf_dir: str) -> int:
-    try:
-        return max(
-            (e.stat().st_mtime_ns for e in os.scandir(sf_dir)
-             if e.name.endswith(".parquet")),
-            default=0,
-        )
-    except FileNotFoundError:
-        return 0
-
-
-def _memoized_plan(name: str, fn: QueryFn) -> QueryFn:
     @functools.wraps(fn)
     def wrapper(spark: SparkSession, sf_dir: str) -> DataFrame:
-        sc = spark.sparkContext
-        token = (sc.applicationId, sc.startTime)
-        key = (token, os.path.abspath(sf_dir), _data_fingerprint(sf_dir), name)
-        df = _PLAN_CACHE.get(key)
-        if df is not None:
-            # LRU recency: re-insertion moves the entry to the young end
-            _PLAN_CACHE[key] = _PLAN_CACHE.pop(key)
-        else:
-            # evict every entry for a DIFFERENT (session, corpus): dead
-            # sessions, regenerated data, other sf_dirs.  Cross-corpus
-            # plans must die here because the persisted intermediates
-            # they reference (hashed shingles, signatures, LSH dots)
-            # live in single-slot per-corpus caches that the next corpus
-            # unpersists — keeping such a plan would silently re-run the
-            # whole pipeline per action behind the memo layer.  Entries
-            # for the SAME corpus stay: they share those persists.
-            for k in [k for k in _PLAN_CACHE if k[:3] != key[:3]]:
-                _PLAN_CACHE.pop(k)
-            df = fn(spark, sf_dir)
-            _PLAN_CACHE[key] = df
-            cap = _plan_cache_cap(spark)
-            while len(_PLAN_CACHE) > cap:
-                _PLAN_CACHE.pop(next(iter(_PLAN_CACHE)))
-        return df
+        pins.release()
+        return fn(spark, sf_dir)
 
     return wrapper
 
 
 def register(
-    name: str, oracle: str | None = None, bench: bool = True, memo: bool = True
+    name: str, oracle: str | None = None, bench: bool = True
 ) -> Callable[[QueryFn], QueryFn]:
     """Decorator: add a query (and optional DuckDB oracle SQL) to the registry.
 
-    ``memo=False`` opts out of the prepared-plan cache — required for
-    queries whose body is a side-effecting scenario replay (the ``ice_*``
-    table-format scenarios rebuild scratch tables; the streaming replays
-    drain a fresh stream) rather than a pure plan over the sf_dir corpus.
+    ``QUERIES[name]`` scopes the query's intermediates to its invocation
+    (see ``_scoped``); the decorated function itself stays a plain
+    builder that operators may call directly without releasing anything.
     """
 
     def deco(fn: QueryFn) -> QueryFn:
-        QUERIES[name] = _memoized_plan(name, fn) if memo else fn
+        QUERIES[name] = _scoped(fn)
         if oracle is not None:
             ORACLE[name] = oracle
         if not bench:
@@ -392,27 +330,15 @@ def load_all() -> None:
 
 
 def release_caches() -> None:
-    """Free every operator-held persisted frame and driver-side cache NOW.
+    """Free every operator-held persisted frame and local checkpoint, and
+    the scenario source-row cache, NOW.
 
-    The dedup/ANN operators persist intermediate frames (hashed shingles,
-    minhash signatures, LSH dots, ...) and release them lazily on their
-    NEXT invocation — the right default for repeated runs, but a
-    long-lived session that is done with that work keeps the last
-    invocation's frames pinned in executor memory until then (VERDICT r2
-    "What's wrong" #5).  This drains all of them, plus the scenario
-    source-row cache, returning the session to an unpinned state."""
-    from iceberg_trino_sql_demo_spark.operators import (
-        dedup,
-        pins,
-        table_format_ops,
-    )
+    A registered query's intermediates otherwise live until the next
+    registered query starts; this returns a session that is done with
+    that work to an unpinned state.  A result backed by a local
+    checkpoint (``dedup_keep_list``) is readable only until the next
+    registered query starts or this is called; after that, rebuild it."""
+    from iceberg_trino_sql_demo_spark.operators import table_format_ops
 
-    pins.release_all()
-    dedup._HASHED_SH_CACHE.clear()  # frames themselves drained via pins
-    dedup._PREF_CACHE.clear()
-    _PLAN_CACHE.clear()
-    while dedup._STAR_CHECKPOINT_RDDS:
-        # freeing a local checkpoint makes its DataFrame unrecoverable —
-        # release means the caller is done with the star run's output
-        dedup._STAR_CHECKPOINT_RDDS.pop().unpersist(False)
+    pins.release()
     table_format_ops._SRC_CACHE.clear()

@@ -226,26 +226,6 @@ def _hsh_capped(corpus_sql: str) -> str:
     )"""
 
 
-#: single-entry cache of the hashed-shingle pipeline, keyed by
-#: (session id, sf_dir, n): (persisted raw frame, capped view).  The
-#: testdata parquet is immutable, so consumers over the same corpus
-#: (jaccard, minhash) legitimately SHARE the materialized intermediate
-#: instead of each re-deriving it — a real engine shares materialized
-#: common subplans the same way.  A different key releases the previous
-#: entry; release_caches() drains it outright.
-_HASHED_SH_CACHE: dict[tuple, tuple[DataFrame, DataFrame]] = {}
-
-
-def _session_token(spark: SparkSession) -> tuple[str, int]:
-    """Stable, collision-free identity for a live session.  ``id(spark)``
-    is NOT that: CPython reuses object ids after GC, so a new session could
-    inherit a cache entry holding frames bound to a dead SparkContext
-    (ADVICE r3).  applicationId + startTime survive any Python-side object
-    churn and differ across sequential sessions."""
-    sc = spark.sparkContext
-    return (sc.applicationId, sc.startTime)
-
-
 def hashed_shingles(spark: SparkSession, sf_dir: str, n: int = 3) -> DataFrame:
     """(doc_id, ha, hb) — distinct word n-grams per document with each
     shingle replaced by the two 60-bit-mod-P halves of ONE md5, and the
@@ -271,28 +251,19 @@ def hashed_shingles_with_stats(
     """hashed_shingles plus the (uncapped) shingle-row count — the
     engine-side statistic physical planning keys off (e.g. the jaccard
     self-join broadcasts its build side only when this proves it small)."""
-    key = (_session_token(spark), sf_dir, n)
-    hit = _HASHED_SH_CACHE.get(key)
-    if hit is not None:
-        pins.touch("hashed_sh")  # reuse = recency, else LRU evicts it first
-        return hit[1], hit[2]
-    _HASHED_SH_CACHE.clear()
-    pins.open_group("hashed_sh", spark)
     shp, capped = build_hashed_shingles(
         _docs(spark, sf_dir).select("doc_id", "text"), n
     )
     n_sh = shp.count()  # materializes the shared persist eagerly
-    pins.adopt("hashed_sh", shp, on_evict=_HASHED_SH_CACHE.clear)
-    _HASHED_SH_CACHE[key] = (shp, capped, n_sh)
     return capped, n_sh
 
 
 def build_hashed_shingles(
     docs: DataFrame, n: int = 3
 ) -> tuple[DataFrame, DataFrame]:
-    """Uncached core of hashed_shingles over an arbitrary (doc_id, text)
-    frame: returns (persisted raw hashed-shingle frame, capped view).
-    Callers own the returned persist.
+    """Core of hashed_shingles over an arbitrary (doc_id, text) frame:
+    returns (raw hashed-shingle frame, pinned for the running query;
+    capped view).
 
     The doc frame is repartitioned to session parallelism before the
     explode: shingling multiplies CPU work ~50x per input byte, so
@@ -315,7 +286,7 @@ def build_hashed_shingles(
     # shp feeds the hot-list aggregate AND the anti-join probe AND whatever
     # the caller builds on top — persist the distinct ONCE; the capped
     # result is a cheap broadcast-filter view over the cache
-    shp = shp.persist()
+    shp = pins.pin(shp)
     # the DF cap must size from the frame actually passed (the scaling
     # bench hands in scaled corpora), so this count cannot come from the
     # base file's footer
@@ -506,7 +477,6 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     # At 100 TB the same structure holds with MEMORY_AND_DISK persistence;
     # signatures are ~num_docs x NUM_PERM longs, orders of magnitude
     # smaller than the data.
-    pins.open_group("minhash", spark)
     # the 64-min aggregate is >100 output fields: keep it inside
     # whole-stage codegen under ANY caller session (default ceiling 100
     # silently drops wide plans to interpreted eval).  The conf is scoped
@@ -516,10 +486,10 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     # CACHED sig and never re-run the wide aggregate.
     with pinned_conf(spark, {"spark.sql.codegen.maxFields": "256"}):
         # shared hashed-shingle pipeline (hash-early, DF-capped, persisted
-        # raw frame, cached per sf_dir) — the same `sh` identity the
-        # jaccard operator and the oracle CTE use
+        # raw frame) — the same `sh` identity the jaccard operator and the
+        # oracle CTE use
         sh = hashed_shingles(spark, sf_dir)
-        sig = _minhash_sig(sh).persist()
+        sig = pins.pin(_minhash_sig(sh))
         sig.count()  # materialize shp + sig once, before broadcast fan-out
     band_cols = [
         F.md5(
@@ -535,16 +505,14 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
         for band in range(BANDS)
     ]
     banded = sig.select("doc_id", F.explode(F.array(*band_cols)).alias("bucket"))
-    cand = (
+    cand = pins.pin(
         banded.alias("x")
         .join(banded.alias("y"),
               (F.col("x.bucket") == F.col("y.bucket"))
               & (F.col("x.doc_id") < F.col("y.doc_id")))
         .select(F.col("x.doc_id").alias("id_a"), F.col("y.doc_id").alias("id_b"))
         .distinct()
-    ).persist()
-    pins.adopt("minhash", sig)
-    pins.adopt("minhash", cand)
+    )
     # verify candidates with exact jaccard over the hashed-shingle sets
     # (integer arithmetic, tau = 0.5), over the candidate docs only:
     # semi-join keeps the verification input proportional to |candidates|,
@@ -622,7 +590,6 @@ def simhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
     cached narrow result (doc_id, simhash) is what both sides of the
     downstream chunk self-join read, so the aggregate runs exactly once.
     """
-    pins.open_group("simhash", spark)
     with pinned_conf(spark, {"spark.sql.codegen.maxFields": "256"}):
         # repartition before the explode for the same reason as
         # build_hashed_shingles: tokenize+md5 work scales with tokens, not
@@ -647,14 +614,13 @@ def simhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
         # ~1 s of driver-side plan building per invocation (r14, same
         # finding as _minhash_sig), and the earlier binary-string
         # concat + conv(_, 2, 10) form cost ~0.7 s of ANALYSIS on top.
-        sig = spark.sql(
+        sig = pins.pin(spark.sql(
             "SELECT doc_id, " + _SIMHASH_BITS_SQL + " AS simhash\n"
             "  FROM (SELECT doc_id, count(1) AS n,\n             "
             + _SIMHASH_SUMS_SQL + "\n          FROM {th} GROUP BY doc_id)",
             th=th,
-        ).persist()
+        ))
         sig.count()
-    pins.adopt("simhash", sig)
     return sig
 
 
@@ -1005,14 +971,6 @@ def _adaptive_planes(n_vecs: int) -> int:
     return max(N_PLANES, math.ceil(math.log2(n_corpus / _PREF_TARGET_OCCUPANCY)))
 
 
-#: single-slot session cache of the persisted bucketed corpus, keyed like
-#: _HASHED_SH_CACHE — BOTH prefiltered operators (single-probe and
-#: multiprobe) consume the same frame, and without the cache the second
-#: build would unpersist the frame the first's memoized plan references
-#: (silently re-running the bucketing per action behind the memo layer)
-_PREF_CACHE: dict[tuple, tuple[DataFrame, int]] = {}
-
-
 def prefiltered_bucketed_corpus(
     spark: SparkSession, sf_dir: str, persist: bool = True
 ) -> tuple[DataFrame, int]:
@@ -1023,26 +981,8 @@ def prefiltered_bucketed_corpus(
     and its multiprobe variant) and the scaling diagnostics
     (dedup_diag.prefiltered_bucket_pairs) so the measured candidate set
     can never drift from the compared one.  ``persist=False`` skips the
-    persist/materialize for count-and-discard diagnostic use; persisted
-    frames are cached per (session, corpus) and released when the corpus
-    changes or release_caches() drains them."""
-    if persist:
-        key = (_session_token(spark), sf_dir)
-        hit = _PREF_CACHE.get(key)
-        if hit is not None:
-            pins.touch("pref")  # reuse = recency, else LRU evicts it first
-            return hit
-        _PREF_CACHE.clear()
-        pins.open_group("pref", spark)
-        res = _build_prefiltered_bucketed(spark, sf_dir, persist=True)
-        _PREF_CACHE[key] = res
-        return res
-    return _build_prefiltered_bucketed(spark, sf_dir, persist=False)
-
-
-def _build_prefiltered_bucketed(
-    spark: SparkSession, sf_dir: str, persist: bool
-) -> tuple[DataFrame, int]:
+    persist/materialize for count-and-discard diagnostic use; a persisted
+    frame is pinned for the running query."""
     from iceberg_trino_sql_demo_spark.operators.similarity import (
         _DIM,
         N_PLANES,
@@ -1072,9 +1012,8 @@ def _build_prefiltered_bucketed(
             *[_dot_lit("embedding", p).alias(f"d{i}") for i, p in enumerate(planes)],
         )
         if persist:
-            dots = dots.persist()
+            dots = pins.pin(dots)
             dots.count()
-            pins.adopt("pref", dots, on_evict=_PREF_CACHE.clear)
         bucketed = dots.select(
             "vec_id", "embedding", "nrm", _bucket_from_dots(n_planes).alias("bucket")
         )
@@ -1102,9 +1041,8 @@ def _build_prefiltered_bucketed(
         bucket_udf("embedding").alias("bucket"),
     )
     if persist:
-        bucketed = bucketed.persist()
+        bucketed = pins.pin(bucketed)
         bucketed.count()
-        pins.adopt("pref", bucketed, on_evict=_PREF_CACHE.clear)
     return bucketed, n_planes
 
 
@@ -1131,13 +1069,13 @@ def dedup_embedding_prefiltered(spark: SparkSession, sf_dir: str) -> DataFrame:
         "bucket", F.col("nrm").alias("nb"),
     )
     pairs = a.join(b, ["bucket"]).where(F.col("id_a") < F.col("id_b"))
-    return _score_candidate_pairs(pairs, "pref_pair")
+    return _score_candidate_pairs(pairs)
 
 
 
 
 def _score_candidate_pairs(
-    cand: DataFrame, group: str, extra_cols: tuple[str, ...] = ()
+    cand: DataFrame, extra_cols: tuple[str, ...] = ()
 ) -> DataFrame:
     """cosine >= 0.95 scoring of an (id_a, ea, na, id_b, eb, nb, ...)
     candidate frame in its OWN whole-stage-codegen stage.
@@ -1153,13 +1091,12 @@ def _score_candidate_pairs(
     the join stage stays a small compiled equi-join, and the scoring
     projection compiles alone (the same 64-term shape stage-1 norm
     projections already compile).  spill-safe MEMORY_AND_DISK, released
-    on the next invocation and by release_caches()."""
+    when the next registered query starts or by release_caches()."""
     from iceberg_trino_sql_demo_spark.operators.similarity import _dot
 
-    pins.open_group(group, cand.sparkSession)
     cosine = _dot("ea", "eb") / (F.col("na") * F.col("nb"))
     scored = pins.pin(
-        group, cand.select(*extra_cols, "id_a", "id_b", cosine.alias("c"))
+        cand.select(*extra_cols, "id_a", "id_b", cosine.alias("c"))
     )
     return (
         scored.where(F.col("c") >= 0.95)
@@ -1263,7 +1200,7 @@ def _multiprobe_pairs(
         cand = probes.join(b, probes["probe"] == b["bucket"]).where(
             F.col("id_a") < F.col("id_b")
         )
-        return _score_candidate_pairs(cand.drop("probe", "bucket"), "mp_pair")
+        return _score_candidate_pairs(cand.drop("probe", "bucket"))
     # scale path (adaptive plane count, beyond any oracle-checked corpus):
     # the expression-dot join scores every candidate one unrolled 64-term
     # dot at a time (measured 24 s warm at the 50x point, 8.3M pairs);
@@ -1357,7 +1294,6 @@ def _multiprobe_pairs(
 def dedup_cluster_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Min-label propagation over exact-dup pairs until fixpoint; returns
     (doc_id, cluster_id, cluster_size) for every document in a cluster."""
-    pins.open_group("cc", spark)
     corpus = _corpus_with_dups(spark, sf_dir)
     pairs = (
         corpus.alias("a")
@@ -1415,7 +1351,7 @@ def dedup_cluster_components(spark: SparkSession, sf_dir: str) -> DataFrame:
         "cluster_size",
     )
     edges.unpersist()
-    pins.adopt("cc", backing)  # consumed lazily by `out`; freed next call
+    pins.track(backing)  # consumed lazily by `out`; freed next query
     return out
 
 
@@ -1433,11 +1369,6 @@ def dedup_cluster_components(spark: SparkSession, sf_dir: str) -> DataFrame:
 # shuffle shape as one min-label round — and only a (count, checksum) pair
 # reaches the driver per round.
 # ---------------------------------------------------------------------------
-#: java RDD handles of the latest star run's final local checkpoint —
-#: freed on the next invocation or by operators.release_caches()
-_STAR_CHECKPOINT_RDDS: list = []
-
-
 def cluster_components_star(edges: DataFrame, max_rounds: int = 40) -> DataFrame:
     """(node, label) for every node in ``edges`` (src/dst BIGINT pairs);
     label = smallest node id in the node's connected component.
@@ -1502,8 +1433,6 @@ def cluster_components_star(edges: DataFrame, max_rounds: int = 40) -> DataFrame
         reg = sc._jsc.getPersistentRDDs()
         return [reg.get(rid) for rid in reg.keySet().toArray() if rid not in before]
 
-    while _STAR_CHECKPOINT_RDDS:
-        _STAR_CHECKPOINT_RDDS.pop().unpersist(False)
     cur, before0 = checkpoint_tracked(sym(edges), eager=True)
     cur_rdds = new_rdds(before0)
     prev_fp = None
@@ -1528,10 +1457,10 @@ def cluster_components_star(edges: DataFrame, max_rounds: int = 40) -> DataFrame
         if fp == prev_fp:
             break
         prev_fp = fp
-    # the returned frame reads the FINAL checkpoint — keep it pinned until
-    # the next invocation (or release_caches; freeing a local checkpoint
-    # makes its DataFrame unrecoverable, so release means done-with-it)
-    _STAR_CHECKPOINT_RDDS.extend(cur_rdds)
+    # the returned frame reads the FINAL checkpoint — keep it until the
+    # next registered query starts (or release_caches; freeing a local
+    # checkpoint makes its DataFrame unrecoverable)
+    pins.track(*cur_rdds)
     # at fixpoint the (symmetric) edges form stars: every non-root node has
     # its component-min root as a smaller neighbor; roots have none
     pointed = (
@@ -1550,9 +1479,8 @@ def cluster_components_star(edges: DataFrame, max_rounds: int = 40) -> DataFrame
 # end-to-end near-dup pruning decision — the operator a training pipeline
 # actually runs: MinHash-LSH verified pairs -> connected components
 # (bounded-round star algorithm) -> per-cluster keeper (lowest doc_id) and
-# a keep/drop flag for every clustered document.  Composes the shared
-# memoized minhash frame (its persisted shingle/signature intermediates
-# are reused, not rebuilt) with cluster_components_star, so the whole
+# a keep/drop flag for every clustered document.  Composes the minhash
+# operator with cluster_components_star, so the whole
 # decision inherits both pieces' 100 TB shapes: banded candidates, O(log n)
 # component rounds, driver sees only per-round fingerprints.  Singleton
 # documents (no verified near-dup) are implicitly kept and excluded here —
@@ -1587,12 +1515,7 @@ def dedup_keep_list(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, cluster_id, cluster_size, keep) for every document in a
     verified near-dup cluster; keep marks the cluster's lowest doc_id
     (deterministic canonical representative)."""
-    from iceberg_trino_sql_demo_spark import operators as _ops
-
-    # the REGISTRY's minhash frame: same plan object -> same persisted
-    # shingle/signature intermediates; calling the raw function here would
-    # unpersist those out from under the memoized minhash plan
-    pairs = _ops.QUERIES["dedup_minhash_lsh"](spark, sf_dir).select("id_a", "id_b")
+    pairs = dedup_minhash_lsh(spark, sf_dir).select("id_a", "id_b")
     edges = pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
     labels = cluster_components_star(edges).select("node", "label")
     sizes = labels.groupBy("label").agg(F.count(F.lit(1)).alias("cluster_size"))
@@ -1706,10 +1629,8 @@ def _semantic_pairs(assigned: DataFrame, use_gemm: bool) -> DataFrame:
         # reference the same assignment subplan (cross join + min_by agg +
         # join-back), which otherwise executes twice per action — measured
         # 3.3 s vs 1.7 s warm at sf0.1.
-        pins.open_group("sem", spark)
         sided = pins.pin(
-            "sem",
-            assigned.withColumn("nrm", F.sqrt(_dot("embedding", "embedding"))),
+            assigned.withColumn("nrm", F.sqrt(_dot("embedding", "embedding")))
         )
         a = sided.select(
             "cluster", F.col("vec_id").alias("id_a"),
@@ -1720,9 +1641,7 @@ def _semantic_pairs(assigned: DataFrame, use_gemm: bool) -> DataFrame:
             F.col("embedding").alias("eb"), F.col("nrm").alias("nb"),
         )
         pairs = a.join(b, "cluster").where(F.col("id_a") < F.col("id_b"))
-        return _score_candidate_pairs(
-            pairs, "sem_pair", extra_cols=("cluster",)
-        )
+        return _score_candidate_pairs(pairs, extra_cols=("cluster",))
     # scale path (adaptive centroid count, beyond any oracle-checked
     # corpus): the expression-dot join scores ~n*cent_mod/2 pairs one
     # unrolled 64-term dot at a time (measured 58 s warm at the 50x scale
@@ -1839,14 +1758,12 @@ _INCR_MINHASH_ORACLE = f"""
 def dedup_incremental_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(id_new, id_old, n_common, n_new, n_old): near-duplicate matches of
     the incoming batch against the full corpus, index self-pairs never
-    generated.  Shares the session-cached hashed-shingle pipeline with
-    the other shingle operators."""
-    pins.open_group("incr_minhash", spark)
+    generated.  Reads the same hashed-shingle pipeline as the other
+    shingle operators."""
     with pinned_conf(spark, {"spark.sql.codegen.maxFields": "256"}):
         sh = hashed_shingles(spark, sf_dir)
-        sig = _minhash_sig(sh).persist()
+        sig = pins.pin(_minhash_sig(sh))
         sig.count()
-    pins.adopt("incr_minhash", sig)
     band_cols = [
         F.md5(
             F.concat_ws(
@@ -1870,7 +1787,7 @@ def dedup_incremental_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.explode(F.array(*band_cols)).alias("bucket"),
     )
     probe = banded.where(F.col("is_batch"))
-    cand = (
+    cand = pins.pin(
         probe.alias("x")
         .join(
             banded.alias("y"),
@@ -1880,8 +1797,7 @@ def dedup_incremental_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select(F.col("x.doc_id").alias("id_new"), F.col("y.doc_id").alias("id_old"))
         .distinct()
-    ).persist()
-    pins.adopt("incr_minhash", cand)
+    )
     cand_ids = (
         cand.select(F.col("id_new").alias("doc_id"))
         .unionAll(cand.select(F.col("id_old").alias("doc_id")))
@@ -2010,8 +1926,7 @@ def dedup_edit_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the prefix projection feeds FOUR branches (both explode sides and
     # both prefix re-attachments) — pin it once so each branch reads the
     # doc-cardinality cache instead of re-scanning + re-splitting text
-    pins.open_group("edit_distance", spark)
-    c = pins.pin("edit_distance", _corpus_with_dups(spark, sf_dir).select(
+    c = pins.pin(_corpus_with_dups(spark, sf_dir).select(
         "doc_id",
         F.substring("text", 1, 60).alias("pfx"),
         F.element_at(F.split("text", " "), 1).alias("tok1"),
@@ -2327,12 +2242,11 @@ def dedup_cross_source_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     # 1.41 s, identical matrix.
     sh = hashed_shingles(spark, sf_dir)
     src = _docs(spark, sf_dir).select("doc_id", "source")
-    pins.open_group("xsrc", spark)
-    grouped = pins.pin("xsrc", (
+    grouped = pins.pin(
         sh.join(src, "doc_id")
         .groupBy("ha", "hb")
         .agg(F.sort_array(F.collect_set("source")).alias("ss"))
-    ))
+    )
     sizes = grouped.select(F.explode("ss").alias("source")).groupBy(
         "source"
     ).agg(F.count(F.lit(1)).alias("n"))
@@ -2418,12 +2332,10 @@ _CALIBRATION_ORACLE = f"""
 
 @register("dedup_minhash_calibration", oracle=_CALIBRATION_ORACLE)
 def dedup_minhash_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
-    pins.open_group("calibration", spark)
     with pinned_conf(spark, {"spark.sql.codegen.maxFields": "256"}):
         sh = hashed_shingles(spark, sf_dir)
-        sig = _minhash_sig(sh).persist()
+        sig = pins.pin(_minhash_sig(sh))
         sig.count()
-    pins.adopt("calibration", sig)
     band_cols = [
         F.md5(
             F.concat_ws(

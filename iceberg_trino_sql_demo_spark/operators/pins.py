@@ -1,243 +1,46 @@
-"""Bounded registry of operator-persisted frames (the session pin budget).
+"""Invocation scope of operator-persisted intermediates.
 
-Every dedup/ANN/graph operator persists intermediate frames (hashed
-shingles, minhash signatures, LSH dots, edge lists, ...) for the
-duration of its invocation and deliberately leaves them pinned so an
-immediately repeated run stays warm.  Each operator used to drain its
-OWN previous pins at the start of its next invocation via a
-module-level ``_X_PERSISTED`` list — hygiene that bounds nothing
-ACROSS operators: a resident session running the whole registry
-accumulates every operator's last invocation until the heap dies
-(measured: OOM near query ~118/156 in a default-1g vanilla session;
-``tests/vanilla_check.py`` documented the manual every-10-queries
-drain; VERDICT r8 "What's wrong" #3).
+Dedup/ANN/graph operators persist intermediate frames (hashed shingles,
+minhash signatures, LSH dots, edge lists, ...) that one query reads
+several times, and dedup's star contraction backs its rounds with
+``localCheckpoint`` RDDs.  Both are recorded here and live for exactly
+one registered query: the registry wrapper (``operators.register``)
+calls ``release()`` when the next registered query starts, and
+``operators.release_caches()`` calls it on demand.  Nothing survives
+into a later query, so a resident session's cached bytes are bounded
+by the largest single query's intermediates — no budget, no eviction.
 
-This registry keeps the per-invocation reuse semantics — ``open_group``
-drains that group's previous pins exactly like the old lists — and adds
-the global bound the lists never had: at every group open, the MEASURED
-cached bytes of the EVICTABLE pins (each candidate attributed by its
-cached-RDD id in ``SparkContext.getRDDStorageInfo``, mem + disk) are
-compared against a budget derived from the driver heap, and the oldest
-pins of OTHER groups are evicted LRU-first until that evictable total
-fits.  Non-evictable blocks — localCheckpoint RDDs, the protected
-group's own pins — occupy their own memory but never trigger blanket
-eviction of everyone else (ADVICE r9).  Eviction is always correctness-safe: pins are plain ``persist()``
-marks, so Catalyst silently recomputes an evicted frame on its next
-action — worst case is recompute cost, never a wrong result.
-(``localCheckpoint``-backed RDDs are NOT pins: unpersisting one is
-unrecoverable, so dedup's star-contraction keeps those in its own
-module list, exempt from the budget.)
-
-Budget: ``SPARK_GRAFT_PIN_BUDGET_MB`` if set, else a heap-share from
-``Runtime.maxMemory`` (local mode: executors share the driver JVM, so
-that IS the storage ceiling): **5% of usable on heaps ≤ 4 GiB** (~36 MB
-at the default 1 GiB vanilla heap — a 30% share was measured to starve
-the 32 executor threads' task buffers and OOM the 203-query sweep at
-query ~92), **30% above** (the 128 GiB test/bench sessions are
-effectively unbounded, preserving warm-rerun behavior there).
+Releasing a persisted frame is correctness-free (a persist is a mark;
+Catalyst recomputes an unpersisted frame on its next action).
+Releasing a local checkpoint is not: a DataFrame backed by one is
+readable only until the next registered query starts.
 """
 from __future__ import annotations
 
-import itertools
-import os
-from typing import Callable
-
 from pyspark.sql import DataFrame
 
-
-class _Pin:
-    __slots__ = ("df", "group", "seq", "on_evict")
-
-    def __init__(self, df: DataFrame, group: str, seq: int,
-                 on_evict: Callable[[], None] | None):
-        self.df = df
-        self.group = group
-        self.seq = seq
-        self.on_evict = on_evict
+#: persisted frames and checkpoint RDDs of the running query
+_HELD: list = []
 
 
-#: insertion-ordered (oldest first) — LRU is by group-open recency, which
-#: _SEQ tracks: re-opening a group re-stamps nothing, but its new pins
-#: carry newer seqs, so a group's age is the age of its newest pin.
-_PINS: list[_Pin] = []
-_SEQ = itertools.count()
-
-
-def _budget_bytes(spark) -> int:
-    mb = os.environ.get("SPARK_GRAFT_PIN_BUDGET_MB")
-    if mb:
-        return int(mb) << 20
-    heap = int(spark.sparkContext._jvm.Runtime.getRuntime().maxMemory())
-    usable = max(heap - (300 << 20), heap // 2)
-    # mirror Spark's unified-memory shape: reserve 300 MB, then keep the
-    # resident-pin share SMALL relative to execution memory — on a
-    # default 1 GiB local heap the 32 executor threads' task buffers,
-    # broadcast variables and codegen all share the same JVM, and a 30%
-    # share measurably starved them (the 203-query vanilla sweep OOM'd at
-    # query ~92 under 30%; ~5% of usable ≈ 36 MB survives while still
-    # keeping the running operator's own frames).  Big heaps scale the
-    # share up: warm-rerun behavior on the 128 GiB bench/test sessions is
-    # effectively unbounded either way.
-    share = 0.05 if usable <= (4 << 30) else 0.30
-    return int(usable * share)
-
-
-def _cached_bytes(spark) -> int:
-    try:
-        infos = spark.sparkContext._jsc.sc().getRDDStorageInfo()
-        return sum(i.memSize() + i.diskSize() for i in infos)
-    except Exception:  # dead/foreign JVM: nothing measurable to bound
-        return 0
-
-
-def _pin_rdd_id(p: _Pin) -> int | None:
-    """RDD id of the pin's cached column buffers — the id its blocks are
-    reported under in ``getRDDStorageInfo`` — via the session's
-    CacheManager.  None when the frame is registered but not (yet)
-    materialized, or the lookup chain is unavailable."""
-    try:
-        jdf = p.df._jdf
-        cm = p.df.sparkSession._jsparkSession.sharedState().cacheManager()
-        cd = cm.lookupCachedData(jdf)
-        if not cd.isDefined():
-            return None
-        return int(cd.get().cachedRepresentation()
-                   .cacheBuilder().cachedColumnBuffers().id())
-    except Exception:
-        return None
-
-
-def _evictable_sizes(spark, cands: list[_Pin]) -> list[int] | None:
-    """Per-candidate cached bytes, attributed by the pin's own cached-RDD
-    id against the JVM's storage report.  Two pins sharing one cached
-    RDD count its bytes ONCE (first claimant).  Returns None when the
-    storage report itself is unreadable — caller falls back to the
-    blunt total-vs-budget loop."""
-    try:
-        infos = spark.sparkContext._jsc.sc().getRDDStorageInfo()
-    except Exception:
-        return None
-    by_id = {int(i.id()): int(i.memSize() + i.diskSize()) for i in infos}
-    sizes, claimed = [], set()
-    for p in cands:
-        rid = _pin_rdd_id(p)
-        if rid is None or rid in claimed or rid not in by_id:
-            sizes.append(0)
-        else:
-            claimed.add(rid)
-            sizes.append(by_id[rid])
-    return sizes
-
-
-def _unpin(p: _Pin) -> None:
-    try:
-        p.df.unpersist(blocking=True)
-    except Exception:  # session gone — the block died with the JVM
-        pass
-    if p.on_evict is not None:
-        p.on_evict()
-
-
-def open_group(group: str, spark=None) -> None:
-    """Start a new invocation of ``group``: drain its previous pins
-    (identical to the old per-module list drain), then — if a session is
-    supplied — enforce the global budget against everyone else's pins."""
-    drain(group)
-    if spark is not None:
-        enforce(spark, protect=group)
-
-
-def pin(group: str, df: DataFrame, level=None,
-        on_evict: Callable[[], None] | None = None) -> DataFrame:
-    """Persist ``df`` and register it under ``group``.  Returns ``df``.
-
-    Enforces the budget here too (protecting ``group``): a multi-stage
-    operator that pins under several groups within ONE query (corpus
-    selection opens hashed_sh + bloom + pack + ...) would otherwise
-    accumulate unbounded until its NEXT open_group."""
-    df.persist(level) if level is not None else df.persist()
-    return adopt(group, df, on_evict)
-
-
-def adopt(group: str, df: DataFrame,
-          on_evict: Callable[[], None] | None = None) -> DataFrame:
-    """Register an ALREADY-persisted frame (builders that own their own
-    persist call, e.g. build_hashed_shingles) under ``group``."""
-    _PINS.append(_Pin(df, group, next(_SEQ), on_evict))
-    enforce(df.sparkSession, protect=group)
+def pin(df: DataFrame) -> DataFrame:
+    """Persist ``df`` for the running query.  Returns ``df``."""
+    _HELD.append(df.persist())
     return df
 
 
-def touch(group: str) -> None:
-    """Refresh a group's LRU recency.  Keyed caches (the shared hashed-
-    shingle frame, the bucketed-corpus cache) return on a hit WITHOUT
-    re-pinning; without this, the most-reused shared frame keeps its
-    original seq and is always the FIRST evicted under budget pressure —
-    exactly backwards (review r9 finding)."""
-    for p in _PINS:
-        if p.group == group:
-            p.seq = next(_SEQ)
-    _PINS.sort(key=lambda p: p.seq)
+def track(*held) -> None:
+    """Record already-persisted frames or ``localCheckpoint`` RDDs (whose
+    owners made the persist themselves) for release with the query."""
+    _HELD.extend(held)
 
 
-def drain(group: str) -> None:
-    keep, dead = [], []
-    for p in _PINS:
-        (dead if p.group == group else keep).append(p)
-    _PINS[:] = keep
-    for p in dead:
-        _unpin(p)
-
-
-def enforce(spark, protect: str) -> None:
-    """Evict oldest pins of groups other than ``protect`` until the bytes
-    THE REGISTRY CAN ACTUALLY FREE fit the budget.
-
-    The r9 version compared the budget against the JVM's TOTAL cached
-    bytes, which include blocks this loop can never release —
-    ``localCheckpoint`` RDDs (exempt by design) and the protected
-    group's own pins.  When those alone exceeded the budget (plausible
-    at the ~36 MB small-heap budget after a star-contraction run), every
-    ``open_group`` evicted ALL other groups' pins without converging,
-    permanently defeating warm reuse (ADVICE r9).  Now each candidate
-    pin's bytes are attributed via its cached-RDD id and only that
-    evictable sum is bounded; exempt blocks merely occupy their own
-    memory, they no longer trigger blanket eviction."""
-    cands = sorted((p for p in _PINS if p.group != protect),
-                   key=lambda p: p.seq)
-    if not cands:
-        return
-    budget = _budget_bytes(spark)
-    sizes = _evictable_sizes(spark, cands)
-    if sizes is None:
-        # storage report unreadable: fall back to the blunt total loop
-        if _cached_bytes(spark) <= budget:
-            return
-        for p in cands:
-            _PINS.remove(p)
-            _unpin(p)
-            if _cached_bytes(spark) <= budget:
-                return
-        return
-    total = sum(sizes)
-    for p, sz in zip(cands, sizes):
-        if total <= budget:
-            return
-        if sz == 0:
-            # unmaterialized pin or second claimant of a shared cached
-            # RDD: unpinning frees nothing — skip instead of burning a
-            # warm frame for zero reclaimed bytes (review r10)
-            continue
-        _PINS.remove(p)
-        _unpin(p)
-        total -= sz
-
-
-def release_all() -> None:
-    dead, _PINS[:] = _PINS[:], []
-    for p in dead:
-        _unpin(p)
-
-
-def pinned_groups() -> set[str]:
-    return {p.group for p in _PINS}
+def release() -> None:
+    """Unpersist everything recorded.  Touches no JVM state when nothing
+    is held."""
+    dead, _HELD[:] = _HELD[:], []
+    for x in dead:
+        try:
+            x.unpersist(True)
+        except Exception:  # session gone — the block died with the JVM
+            pass

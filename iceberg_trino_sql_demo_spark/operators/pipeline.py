@@ -379,11 +379,10 @@ def contamination_bloom_prefilter(spark: SparkSession, sf_dir: str) -> DataFrame
 
     from iceberg_trino_sql_demo_spark.operators.dedup import shingle_hash_pairs
 
-    pins.open_group("bloom", spark)
     docs = _docs(spark, sf_dir).select("doc_id", "text")
     is_eval = F.col("doc_id") % _EVAL_MOD == 0
     eval_sh = shingle_hash_pairs(docs.where(is_eval)).select("h1", "h2").distinct()
-    pins.pin("bloom", eval_sh)
+    pins.pin(eval_sh)
     n_eval = eval_sh.count()  # one scalar to the driver (sizes the bitset)
 
     m_bits = max(1024, 1 << math.ceil(math.log2(n_eval * 10 + 1)))
@@ -417,7 +416,7 @@ def contamination_bloom_prefilter(spark: SparkSession, sf_dir: str) -> DataFrame
     # the train shingle set feeds TWO branches (per-doc sizes and the
     # bloom-filtered candidate scan) — pin it so the second branch reads
     # the cache instead of re-exploding + re-hashing the corpus
-    train = pins.pin("bloom", shingle_hash_pairs(docs.where(~is_eval)))
+    train = pins.pin(shingle_hash_pairs(docs.where(~is_eval)))
     # n_shingles counts the UNfiltered per-doc shingle set (the bloom only
     # prunes the overlap-join side)
     sizes = train.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_shingles"))
@@ -1134,8 +1133,7 @@ def _pack_buckets(n_docs: int) -> int:
 )
 def training_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _docs(spark, sf_dir).select("doc_id", "text")
-    pins.open_group("pack", spark)
-    toks = (
+    toks = pins.pin(
         docs.select("doc_id", F.explode(F.split("text", " ")).alias("t"))
         .where(F.col("t") != "")
         .groupBy("doc_id")
@@ -1143,9 +1141,7 @@ def training_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
         # persisted: three consumers (max_id job, the per-bucket window
         # branch, the bucket-totals branch) would otherwise each re-run
         # the tokenize+agg scan — the heaviest stage at corpus scale
-        .persist()
     )
-    pins.adopt("pack", toks)
     # order-preserving deterministic buckets: doc_id DIV K
     from iceberg_trino_sql_demo_spark.session import parquet_row_count, table_path
 
@@ -1344,9 +1340,8 @@ def source_dsir_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
          % _DSIR_B)
     # the bigram stream feeds TWO passes (bucket model, then scoring);
     # pin it so the corpus is read/split/hashed once per invocation
-    pins.open_group("dsir", spark)
-    bg2 = pins.pin("dsir", bg.select("doc_id", b.alias("b"),
-                                     (F.col("lang") == "en").alias("en")))
+    bg2 = pins.pin(bg.select("doc_id", b.alias("b"),
+                             (F.col("lang") == "en").alias("en")))
     # ONE map-side-combinable aggregate builds BOTH unigram models
     # (raw count + target count per bucket); the totals fold from the
     # 4096-row model, not from another corpus pass
@@ -1385,7 +1380,7 @@ def source_dsir_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     # fewer than K docs the cutoff IS the global minimum, so every row
     # still selects.  No doc-grain row ever crosses a SinglePartition
     # exchange.
-    scored = pins.pin("dsir", scored)
+    scored = pins.pin(scored)
     cut = (
         scored.orderBy(F.col("dsir_logweight").desc(), F.col("doc_id"))
         .limit(_DSIR_TOP_K)

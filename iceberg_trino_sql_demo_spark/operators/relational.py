@@ -605,8 +605,7 @@ def _sketch_banded_ranked(base: DataFrame, ks: DataFrame) -> DataFrame:
     # offset pass and ksx) — without an eager persist each broadcast build
     # re-runs the 0.4 s sketch aggregate (measured: the persist halves the
     # warm query)
-    pins.open_group("quant", ks.sparkSession)
-    ks = pins.pin("quant", ks)
+    ks = pins.pin(ks)
     ks.count()
     off = (
         base.join(
@@ -2761,7 +2760,6 @@ def _derby_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
      ORDER BY total_price
     """,
     bench=False,  # scenario setup cost (one-time Derby publish) dominates
-    memo=False,
 )
 def federation_jdbc_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     c = _t(spark, sf_dir, "customer").where(F.col("c_mktsegment") == "AUTOMOBILE")

@@ -277,8 +277,7 @@ def ann_topk_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     # honest production shape anyway: at 100 TB the bucket is computed
     # once at WRITE time and stored as a cluster/partition key, never
     # recomputed per probe.
-    pins.open_group("lsh", spark)
-    dots = pins.pin("lsh", e.select(
+    dots = pins.pin(e.select(
         "vec_id",
         "embedding",
         *[_dot_lit("embedding", p).alias(f"d{i}") for i, p in enumerate(planes)],
@@ -663,14 +662,13 @@ def ann_knn_join(spark: SparkSession, sf_dir: str) -> DataFrame:
                 f"embeddings dim changed: data has {len(vec)}, engine built "
                 f"for {_DIM} — update similarity._DIM"
             )
-    pins.open_group("knn", spark)
     # stage 1: per-query dots + self-norm as separate top-level expressions
     scored = e.select(
         "vec_id",
         F.sqrt(_dot("embedding", "embedding")).alias("nrm"),
         *[_dot_lit("embedding", vec).alias(f"d{i}") for i, (_, vec) in enumerate(qs)],
     )
-    scored = pins.pin("knn", scored)
+    scored = pins.pin(scored)
     # stage 2: assemble cosines from the cached scalars, explode, rank
     pairs = F.explode(
         F.array(
@@ -771,14 +769,13 @@ def ann_knn_join_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
             dot = sum(a * c for a, c in zip(vec, p))
             b += (1 if dot >= 0 else 0) * (2 ** i)
         q_buckets.append(b)
-    pins.open_group("knnl", spark)
     staged = e.select(
         "vec_id",
         F.sqrt(_dot("embedding", "embedding")).alias("nrm"),
         *[_dot_lit("embedding", p).alias(f"d{i}") for i, p in enumerate(planes)],
         *[_dot_lit("embedding", vec).alias(f"s{i}") for i, (_, vec) in enumerate(qs)],
     )
-    staged = pins.pin("knnl", staged)
+    staged = pins.pin(staged)
     bucketed = staged.withColumn("bucket", _bucket_from_dots())
     pairs = F.explode(
         F.array(

@@ -17,13 +17,7 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 
-from iceberg_trino_sql_demo_spark.operators import register as _register
-
-import functools
-
-# streaming replays drain a fresh availableNow stream per invocation -
-# opt out of the prepared-plan cache
-register = functools.partial(_register, memo=False)
+from iceberg_trino_sql_demo_spark.operators import register
 
 
 @register(

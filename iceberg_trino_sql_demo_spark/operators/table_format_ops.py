@@ -20,13 +20,7 @@ import tempfile
 from pyspark.sql import DataFrame, SparkSession
 
 from iceberg_trino_sql_demo_spark.functions.trino import iround_long
-from iceberg_trino_sql_demo_spark.operators import register as _register
-
-import functools
-
-# every query here is a side-effecting scenario replay (scratch engine
-# tables rebuilt per call) - opt out of the prepared-plan cache
-register = functools.partial(_register, memo=False)
+from iceberg_trino_sql_demo_spark.operators import register
 from iceberg_trino_sql_demo_spark.operators.relational import customer_pipeline
 from iceberg_trino_sql_demo_spark.sources.table import Table
 
@@ -1697,7 +1691,6 @@ def ice_cdc_replica_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT 940001, 'STREAMED', 40.0, 'insert', CAST(3 AS BIGINT)
     """,
     bench=False,
-    memo=False,
 )
 def ice_stream_table_changes(spark: SparkSession, sf_dir: str) -> DataFrame:
     import uuid as _uuid
@@ -1812,7 +1805,6 @@ def ice_rename_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     ) AS v(custkey, name, mktsegment, account_balance, nation)
     """,
     bench=False,
-    memo=False,
 )
 def ice_stream_cdc_to_replica(spark: SparkSession, sf_dir: str) -> DataFrame:
     import uuid as _uuid

@@ -998,10 +998,8 @@ def events_user_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(F.date_trunc("hour", "ts").alias("h"), "user_id")
         .distinct()
     )
-    pins.open_group("tri", spark)
-    p0 = pins.pin("tri", p0)
-    return _triangles_topk(_tri_participants(p0), group="tri",
-                           open=False)
+    p0 = pins.pin(p0)
+    return _triangles_topk(_tri_participants(p0))
 
 
 #: opt-in hot-hour cap for the capped variant: per hour, only the
@@ -1093,23 +1091,15 @@ def events_user_triangles_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
         .where(F.col("rn") <= _TRI_HOUR_CAP)
         .select("h", "user_id")
     )
-    return _triangles_topk(p, group="tri_capped")
+    return _triangles_topk(p)
 
 
-def _triangles_topk(p: DataFrame, group: str,
-                    open: bool = True) -> DataFrame:
+def _triangles_topk(p: DataFrame) -> DataFrame:
     """Shared triangle pipeline over a (h, user_id) co-occurrence frame:
-    edge build -> degree-oriented wedge join -> per-corner top-k.  Each
-    variant pins its intermediates under its own group so benching one
-    never drains the frames the other's memoized plan references.
-    ``open=False`` when the caller already opened the group (the
-    adaptive default pins its participant frame there first)."""
-    spark = p.sparkSession
+    edge build -> degree-oriented wedge join -> per-corner top-k."""
     a = p.alias("a")
     b = p.alias("b")
-    if open:
-        pins.open_group(group, spark)
-    e0 = pins.pin(group, (
+    e0 = pins.pin(
         a.join(b, (F.col("a.h") == F.col("b.h"))
                & (F.col("a.user_id") < F.col("b.user_id")))
         .select(
@@ -1117,14 +1107,14 @@ def _triangles_topk(p: DataFrame, group: str,
             F.greatest("a.user_id", "b.user_id").alias("y"),
         )
         .distinct()
-    ))
-    deg = pins.pin(group, (
+    )
+    deg = pins.pin(
         # one scan of the pinned edge list (explode both endpoints)
         # instead of a two-branch union that scans the cache twice
         e0.select(F.explode(F.array("x", "y")).alias("u"))
         .groupBy("u")
         .agg(F.count(F.lit(1)).alias("d"))
-    ))
+    )
     # The degree vector is node-cardinality, same as PageRank's
     # contribution vector: broadcast is right ONLY while it fits the
     # budget.  Same measured-size gate (~16 B/row of packed longs vs the
@@ -1148,7 +1138,7 @@ def _triangles_topk(p: DataFrame, group: str,
             rank("dyd", "y").alias("ry"),
         )
     )
-    oe = pins.pin(group, ranked.select(
+    oe = pins.pin(ranked.select(
         F.when(F.col("rx") < F.col("ry"), F.col("x")).otherwise(F.col("y")).alias("src"),
         F.when(F.col("rx") < F.col("ry"), F.col("y")).otherwise(F.col("x")).alias("dst"),
         F.greatest("rx", "ry").alias("dst_rank"),
@@ -1452,8 +1442,8 @@ def events_ndv_hll_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 _PR_TOPK = 20
 
-#: the pagerank pin group holds the symmetric edge list + degree vector
-#: (re-built per invocation, bounded by operators.pins): the superstep
+#: pagerank pins the symmetric edge list + degree vector for the running
+#: query (operators.pins): the superstep
 #: references the edge list THREE times (degree count, both neighbor-sum
 #: probe sides) — unpersisted, Catalyst re-runs the co-occurrence
 #: self-join per reference (measured: 19 Exchange nodes vs the pinned 9)
@@ -1498,19 +1488,18 @@ def events_pagerank_iter(spark: SparkSession, sf_dir: str) -> DataFrame:
         .distinct()
     )
     a, b = p.alias("a"), p.alias("b")
-    pins.open_group("pagerank", spark)
-    e0 = pins.pin("pagerank", (
+    e0 = pins.pin(
         a.join(b, (F.col("a.h") == F.col("b.h"))
                & (F.col("a.user_id") < F.col("b.user_id")))
         .select(F.col("a.user_id").alias("x"), F.col("b.user_id").alias("y"))
         .distinct()
-    ))
-    deg = pins.pin("pagerank", (
+    )
+    deg = pins.pin(
         e0.select(F.col("x").alias("u"))
         .unionAll(e0.select(F.col("y").alias("u")))
         .groupBy("u")
         .agg(F.count(F.lit(1)).alias("d"))
-    ))
+    )
     # contribution vector is node-cardinality — broadcast is the right
     # plan ONLY while it fits; an unconditional hint would be honored
     # regardless of size and OOM a large graph instead of falling back.
@@ -1622,8 +1611,7 @@ def events_rolling_ndv_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the deduped (hour, user) frame feeds THREE branches (hour list,
     # register build, exact side) — pin it so each reads the cache
     # instead of re-scanning + re-deduplicating the event stream
-    pins.open_group("rolling_ndv", spark)
-    d = pins.pin("rolling_ndv", ev.select(hh.alias("hh"), "user_id").distinct())
+    d = pins.pin(ev.select(hh.alias("hh"), "user_id").distinct())
     hours = d.select("hh").distinct()
     h = d.select(
         "hh", F.md5(F.col("user_id").cast("string")).alias("hx")
@@ -1749,10 +1737,9 @@ def events_kmv_set_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     # exact NDV, the intersection join, the union) — pin all three so
     # the seven small crossJoined aggregates read caches instead of
     # re-running scan+md5+distinct per branch
-    pins.open_group("kmv", spark)
-    ua = pins.pin("kmv", keys(F.col("event_type") == "purchase"))
-    ub = pins.pin("kmv", keys(F.col("event_type") == "click"))
-    uu = pins.pin("kmv", ua.unionAll(ub).distinct())
+    ua = pins.pin(keys(F.col("event_type") == "purchase"))
+    ub = pins.pin(keys(F.col("event_type") == "click"))
+    uu = pins.pin(ua.unionAll(ub).distinct())
 
     def sketch_stats(df: DataFrame, tag: str) -> DataFrame:
         sk = df.orderBy("h").limit(_KMV_K)  # TakeOrdered: mergeable top-K

@@ -16,25 +16,6 @@ def _pairs(df):
     return {(r.id_a, r.id_b) for r in df.select("id_a", "id_b").collect()}
 
 
-def test_bench_drain_detects_operator_state(spark):
-    """The bench's honest-measurement gate (r14): after a pin-holding
-    operator runs, the dirty check must see the residue, and
-    release_caches() must return the process to a fully clean state so
-    the next timed run rebuilds every intermediate from parquet."""
-    import bench
-    from iceberg_trino_sql_demo_spark.operators import dedup, pins
-
-    ops.release_caches()
-    assert not bench._operator_state_dirty()
-    ops.QUERIES["dedup_minhash_lsh"](spark, SF).count()
-    assert bench._operator_state_dirty()
-    assert pins.pinned_groups() and dedup._HASHED_SH_CACHE
-    ops.release_caches()
-    assert not bench._operator_state_dirty()
-    assert not pins.pinned_groups()
-    assert not ops._PLAN_CACHE
-
-
 def test_minhash_lsh_recall_vs_exact(spark):
     """LSH candidates + exact verification must recover every true pair at
     tau=0.5 that banding can see; with 8 bands x 4 rows the miss
@@ -470,21 +451,6 @@ def test_jaccard_join_strategy_follows_size_guard(spark, monkeypatch):
     ops.release_caches()
 
 
-def test_hashed_shingle_cache_keyed_by_session_token(spark):
-    """The shared shingle cache must key on (applicationId, startTime) —
-    never id(spark), whose CPython reuse after GC could hand a NEW session
-    a frame bound to a dead SparkContext (ADVICE r3).  A foreign token
-    (another session's hypothetical applicationId) must miss."""
-    from iceberg_trino_sql_demo_spark.operators import dedup
-
-    dedup.hashed_shingles(spark, SF)
-    sc = spark.sparkContext
-    token = (sc.applicationId, sc.startTime)
-    keys = list(dedup._HASHED_SH_CACHE)
-    assert keys and all(k[0] == token for k in keys), keys
-    assert (("local-0000000000000", 0), SF, 3) not in dedup._HASHED_SH_CACHE
-
-
 def test_release_caches_unpins_everything(spark):
     """After release_caches() no persisted RDD may remain registered —
     the lazy next-invocation release plus this explicit drain together
@@ -497,48 +463,25 @@ def test_release_caches_unpins_everything(spark):
     assert spark.sparkContext._jsc.getPersistentRDDs().size() == 0
 
 
-def test_pin_budget_evicts_lru_and_recomputes(spark, monkeypatch):
-    """The bounded pin registry (operators/pins.py, VERDICT r8 #7): with
-    the budget forced to zero, opening a NEW group must LRU-evict every
-    other group's resident pins — and an evicted operator re-run must
-    silently recompute to the identical result (persist marks are
-    correctness-free).  The shared shingle cache's on_evict hook must
-    drop its dict entry so consumers rebuild instead of reusing a frame
-    whose persist mark is gone."""
-    from iceberg_trino_sql_demo_spark.operators import dedup, pins
+def test_next_registered_query_releases_intermediates(spark):
+    """A registered query's persisted intermediates live until the next
+    registered query starts (operators/pins.py): building that query
+    unpersists them.  The release is correctness-free — the first
+    result, collected again afterwards, recomputes the identical rows."""
+    jsc = spark.sparkContext._jsc
 
-    ops.load_all()
+    def persisted():
+        return set(jsc.getPersistentRDDs().keySet().toArray())
+
     ops.release_caches()
-    n1 = sorted(map(tuple, ops.QUERIES["dedup_minhash_lsh"](spark, SF).collect()))
-    assert {"hashed_sh", "minhash"} <= pins.pinned_groups()
-    monkeypatch.setenv("SPARK_GRAFT_PIN_BUDGET_MB", "0")
-    ops.QUERIES["dedup_simhash"](spark, SF).count()
-    assert pins.pinned_groups() == {"simhash"}
-    assert not dedup._HASHED_SH_CACHE  # on_evict dropped the entry
-    monkeypatch.delenv("SPARK_GRAFT_PIN_BUDGET_MB")
-    ops._PLAN_CACHE.clear()  # force a rebuild through the evicted state
-    n2 = sorted(map(tuple, ops.QUERIES["dedup_minhash_lsh"](spark, SF).collect()))
-    assert n1 == n2
+    first = ops.QUERIES["dedup_minhash_lsh"](spark, SF)
+    rows = sorted(map(tuple, first.collect()))
+    held = persisted()
+    assert held
+    ops.QUERIES["federation_agg"](spark, SF)
+    assert not held & persisted()
+    assert sorted(map(tuple, first.collect())) == rows
     ops.release_caches()
-
-
-def test_plan_cache_is_lru_bounded(spark, monkeypatch):
-    """The prepared-plan cache must hold at most _PLAN_CACHE_MAX entries
-    (resident Catalyst trees are driver-heap weight), evicting oldest
-    first and refreshing recency on hit."""
-    monkeypatch.setattr(ops, "_PLAN_CACHE_MAX", 3)
-    ops.load_all()
-    ops._PLAN_CACHE.clear()
-    names = ["federation_agg", "customer_pipeline", "orderdate_range",
-             "left_join_shape"]
-    for n in names[:3]:
-        ops.QUERIES[n](spark, SF)
-    first = ops.QUERIES[names[0]](spark, SF)  # hit: refresh recency
-    ops.QUERIES[names[3]](spark, SF)  # overflow: evicts names[1], not [0]
-    assert len(ops._PLAN_CACHE) == 3
-    cached_names = {k[3] for k in ops._PLAN_CACHE}
-    assert cached_names == {names[0], names[2], names[3]}
-    assert ops.QUERIES[names[0]](spark, SF) is first  # still memoized
 
 
 def test_multiprobe_prefiltered_superset_and_candidate_bound(spark, sf_oracle_dir):
@@ -562,9 +505,11 @@ def test_multiprobe_prefiltered_superset_and_candidate_bound(spark, sf_oracle_di
     assert sp <= mp
     bucketed, n_planes = dedup.prefiltered_bucketed_corpus(spark, sf_oracle_dir)
     n = bucketed.count()
-    # the cached frame is shared: a second call returns the same object
+    # the bucketing is deterministic: a rebuild assigns the same buckets
     again, _ = dedup.prefiltered_bucketed_corpus(spark, sf_oracle_dir)
-    assert again is bucketed
+    assert sorted(again.select("vec_id", "bucket").collect()) == sorted(
+        bucketed.select("vec_id", "bucket").collect()
+    )
     assert n_planes >= 1 and n > 0
 
 
@@ -712,22 +657,16 @@ def test_triangles_degree_broadcast_gate(spark, monkeypatch):
         # (covered by test_triangles_gemm_gate below) and leave no join
         # for this test to inspect
         monkeypatch.setattr(wo, "_TRI_GEMM_BUDGET", 0)
-        # the prepared-plan memo would hand back the DataFrame built under
-        # the previous budget/conf — clear it so each run re-plans
-        ops._PLAN_CACHE.clear()
         below = ops.QUERIES["events_user_triangles"](spark, SF)
         below_rows = [tuple(r) for r in below.collect()]
         assert "BroadcastHashJoin" in final_plan(below)
 
         monkeypatch.setattr(wo, "_NODE_BROADCAST_BUDGET", 0)
-        ops._PLAN_CACHE.clear()
         above = ops.QUERIES["events_user_triangles"](spark, SF)
         above_rows = [tuple(r) for r in above.collect()]
         assert "BroadcastHashJoin" not in final_plan(above)
         assert above_rows == below_rows
     finally:
-        # drop the budget-0 plan so later tests re-plan under the real gate
-        ops._PLAN_CACHE.clear()
         for k, v in saved.items():
             if v is None:
                 conf.unset(k)
@@ -749,20 +688,15 @@ def test_triangles_gemm_gate(spark, monkeypatch):
         return final_plan_section(
             df._jdf.queryExecution().executedPlan().toString())
 
-    try:
-        ops._PLAN_CACHE.clear()
-        gemm = ops.QUERIES["events_user_triangles"](spark, SF)
-        gemm_rows = [tuple(r) for r in gemm.collect()]
-        assert "MapInPandas" in final_plan(gemm)
+    gemm = ops.QUERIES["events_user_triangles"](spark, SF)
+    gemm_rows = [tuple(r) for r in gemm.collect()]
+    assert "MapInPandas" in final_plan(gemm)
 
-        monkeypatch.setattr(wo, "_TRI_GEMM_BUDGET", 0)
-        ops._PLAN_CACHE.clear()
-        enum = ops.QUERIES["events_user_triangles"](spark, SF)
-        enum_rows = [tuple(r) for r in enum.collect()]
-        assert "MapInPandas" not in final_plan(enum)
-        assert gemm_rows == enum_rows
-    finally:
-        ops._PLAN_CACHE.clear()
+    monkeypatch.setattr(wo, "_TRI_GEMM_BUDGET", 0)
+    enum = ops.QUERIES["events_user_triangles"](spark, SF)
+    enum_rows = [tuple(r) for r in enum.collect()]
+    assert "MapInPandas" not in final_plan(enum)
+    assert gemm_rows == enum_rows
 
 
 def test_incremental_minhash_consistency(spark):
@@ -1101,42 +1035,6 @@ def test_exotic_current_schema_stays_off_segment_route(spark):
     assert exotic.df().count() == 1
 
 
-def test_pin_touch_refreshes_lru_recency(spark, monkeypatch):
-    """A keyed-cache HIT must refresh the group's LRU age: under budget
-    pressure the most-REUSED shared frame (the hashed-shingle pipeline)
-    must outlive a one-shot group pinned between reuses.
-
-    The budget is made DISCRIMINATING (ADVICE r9: the old budget=0
-    version evicted every non-protected pin, so the assertion passed
-    with or without the touch): every pin weighs 1 byte and the budget
-    admits all but the oldest group's pins — so exactly the oldest
-    group falls, and WHICH group is oldest is the tested property."""
-    from iceberg_trino_sql_demo_spark.operators import dedup, pins
-
-    ops.load_all()
-    ops.release_caches()
-    dedup.hashed_shingles(spark, SF)          # pin seq: oldest
-    ops.QUERIES["dedup_simhash"](spark, SF).count()  # younger group
-    dedup.hashed_shingles(spark, SF)          # cache HIT -> touch
-    groups_before = pins.pinned_groups()
-    assert {"hashed_sh", "simhash"} <= groups_before
-    n_sim = sum(1 for p in pins._PINS if p.group == "simhash")
-    n_all = len(pins._PINS)
-    monkeypatch.setattr(pins, "_budget_bytes", lambda spark: n_all - n_sim)
-    monkeypatch.setattr(
-        pins, "_evictable_sizes", lambda spark, cands: [1] * len(cands)
-    )
-    # a new group's open evicts oldest-first until under budget; with the
-    # touch, simhash (now oldest) must fall FIRST and the eviction stops
-    # there, so the shingle frame survives.  A broken touch leaves
-    # hashed_sh oldest -> it falls -> either assertion trips.
-    pins.open_group("probe", spark)
-    groups = pins.pinned_groups()
-    assert "simhash" not in groups
-    assert "hashed_sh" in groups
-    ops.release_caches()
-
-
 def test_segment_scan_declared_column_projection(spark, monkeypatch):
     """Table.df(columns=...) reaches the Arrow reader (VERDICT r9 #5):
     the Python DataSource API has no column-pruning hook, so a declared
@@ -1210,30 +1108,6 @@ def test_segment_scan_declared_column_projection(spark, monkeypatch):
     frac_ok = t._pyds_bytes_ok(1000, 10**9, ["o_orderkey"])
     full_ok = t._pyds_bytes_ok(1000, 10**9, None)
     assert frac_ok and not full_ok
-
-
-def test_pin_enforce_skips_zero_sized_candidates(spark, monkeypatch):
-    """r10 review: evicting an unmaterialized pin (attributed size 0)
-    frees nothing — the eviction loop must skip it rather than burn a
-    warm frame for zero reclaimed bytes."""
-    from iceberg_trino_sql_demo_spark.operators import pins
-
-    pins.release_all()
-    a = spark.range(10).persist()
-    b = spark.range(20).persist()
-    b.count()
-    pins.adopt("ga", a)   # oldest, will attribute 0 (never materialized)
-    pins.adopt("gb", b)
-    monkeypatch.setattr(pins, "_budget_bytes", lambda spark: 1)
-    monkeypatch.setattr(
-        pins, "_evictable_sizes",
-        lambda spark, cands: [0 if p.group == "ga" else 10 for p in cands],
-    )
-    pins.enforce(spark, protect="probe")
-    groups = pins.pinned_groups()
-    assert "ga" in groups, "zero-sized pin must survive (freeing nothing)"
-    assert "gb" not in groups, "the pin actually holding bytes is evicted"
-    pins.release_all()
 
 
 def test_decode_wav_roundtrip_and_refusals():

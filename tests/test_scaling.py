@@ -532,7 +532,6 @@ def test_pack_sequences_bucket_count_self_sizes_and_is_invariant(
     assert pl._pack_buckets(10**13) == pl._PACK_MAX_BUCKETS
 
     def run():
-        ops._PLAN_CACHE.clear()
         return sorted(
             tuple(r)
             for r in ops.QUERIES["training_pack_sequences"](spark, sf_dir).collect()
@@ -546,7 +545,6 @@ def test_pack_sequences_bucket_count_self_sizes_and_is_invariant(
     monkeypatch.setattr(pl, "_PACK_MIN_BUCKETS", 1)
     monkeypatch.setattr(pl, "_PACK_DOCS_PER_BUCKET", 10**9)  # -> 1 bucket
     assert run() == base
-    ops._PLAN_CACHE.clear()
 
 
 @pytest.fixture(scope="module")

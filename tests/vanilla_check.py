@@ -31,13 +31,10 @@ def main() -> int:
     spark = SparkSession.builder.getOrCreate()
     failures = 0
     for i, name in enumerate(names):
-        # NO manual drains: the bounded pin registry (operators/pins.py,
-        # VERDICT r8 #7) LRU-evicts resident operator persists against a
-        # heap-derived budget at every group open, and the prepared-plan
-        # cache is LRU-bounded — a full-registry sweep in one default-heap
-        # (1g) vanilla session must now fit on its own.  (Before the
-        # budget: OOM at query ~118 of 156 with no drains; this harness
-        # drained every 10 queries as a workaround.)
+        # NO manual drains: each registered query releases the previous
+        # query's persisted intermediates when it starts
+        # (operators/pins.py), so a full-registry sweep in one
+        # default-heap (1g) vanilla session must fit on its own.
         t0 = time.time()
         try:
             sdf = qs[name](spark, SF_DIR).toPandas()
