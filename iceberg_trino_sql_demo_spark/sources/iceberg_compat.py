@@ -78,7 +78,6 @@ from iceberg_trino_sql_demo_spark.sources.metadata import (
     MAIN,
     DataFile,
     DeleteFile,
-    Manifest,
     MetadataIO,
     NestedField,
     PartitionSpec,
@@ -795,7 +794,9 @@ def adopt_iceberg_table(spark, engine_location: str, iceberg_location: str,
         delete_files.extend(
             _normalize_equality_delete(engine_location, d, list(fields))
             for d in info.get("equality_deletes", ()))
-        manifest = Manifest(new_files, [d for d in delete_files if d])
+        manifest = t._manifest(None).with_delta(
+            added=new_files, delete_files=[d for d in delete_files if d]
+        )
         summary = {
             "added-data-files": len(new_files),
             "added-records": sum(f.record_count for f in new_files),
@@ -1344,7 +1345,17 @@ def sync_adopted_table(spark, table) -> int | None:
         _normalize_equality_delete(table.location, d,
                                    list(table.meta.schema.fields))
         for d in info.get("equality_deletes", ()))
-    manifest = Manifest(new_files, [d for d in delete_files if d])
+    # express the new full state as a delta against the current one: files
+    # the source still lists keep their entries (and row-id ranges), so
+    # only added entries and segments holding removed ones are written
+    base = table._manifest(table._resolve(_MAIN))
+    base_paths = base.data_paths()
+    new_paths = {f.path for f in new_files}
+    manifest = base.with_delta(
+        added=[f for f in new_files if f.path not in base_paths],
+        removed=[f for f in base.data_files if f.path not in new_paths],
+        delete_files=[d for d in delete_files if d],
+    )
     summary = {
         "adopted": "true",
         "adopted-from": src,

@@ -483,8 +483,7 @@ def export_iceberg_metadata(table, dest: str, ref: str = "main",
     snapshot_id = int(snap.snapshot_id)
     seq = max(1, int(snap.sequence_number))
     data_entries = []
-    # .data_files materializes full entries (stats included) on both the
-    # eager Manifest and LazyManifest
+    # .data_files materializes full entries (stats included)
     data_files = manifest.data_files
     for df in data_files:
         lo, hi, nulls = [], [], []

@@ -392,11 +392,13 @@ def _summary_admits(seg: SegmentRef, meta: TableMetadata, predicates: list) -> b
 
 
 class LazyManifest:
-    """A snapshot's live-file state, segment-backed, with an optional
-    recorded delta (added entries / removed paths) against its base
-    segments.  Duck-types eager ``metadata.Manifest`` (``data_files`` /
-    ``delete_files``); materializes Python entries only when a consumer
-    genuinely needs every one."""
+    """A snapshot's live-file state — the only representation of it:
+    immutable base segments plus a recorded delta (added entries / removed
+    paths) against them.  A new table is zero segments; a loaded format-1
+    manifest is zero segments with every entry in ``added``.  Exposes
+    ``data_files`` / ``delete_files`` like the ``metadata.Manifest`` scan
+    list, but materializes Python entries only when a consumer genuinely
+    needs every one."""
 
     def __init__(
         self,

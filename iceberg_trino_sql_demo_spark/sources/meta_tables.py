@@ -134,9 +134,7 @@ def metadata_table(table, kind: str) -> DataFrame:
              None, d.sequence_number)
             for d in manifest.delete_files
         ]
-        from iceberg_trino_sql_demo_spark.sources.manifest_store import LazyManifest
-
-        if isinstance(manifest, LazyManifest) and manifest.segments:
+        if manifest.segments:
             # manifests ARE data: serve $files straight off the segment
             # parquet with a distributed Spark scan instead of driver-side
             # entry materialization (26.8 s -> a parquet scan at 1M files;

@@ -11,15 +11,19 @@ On-disk layout per table::
     <location>/
       metadata/
         v1.metadata.json, v2.metadata.json, ...   (immutable)
-        snap-<id>.json                            (one manifest per snapshot)
+        snap-<id>-<uuid>.json                     (one manifest list per snapshot)
+        seg-<uuid>.parquet                        (immutable entry segments)
         version-hint.text                         (current version pointer)
       data/<commit-uuid>/...parquet               (immutable data file groups)
       deletes/...parquet                          (position-delete files)
 
-Scale note: manifests are JSON here for debuggability; the entries are
-O(files), and at 100 TB you would store them as parquet and read them with
-Spark itself — the *model* (full-state manifest per snapshot, stats per
-file, spec-id per file) is unchanged.  Nothing below ever reads data files.
+A snapshot's manifest is a small JSON manifest list that names parquet
+entry segments (one row per data file, with typed stats columns) and
+carries the snapshot's delete files inline.  Snapshots share segments, so
+a commit writes only its delta (``manifest_store.py``); in memory the
+state is a ``manifest_store.LazyManifest``.  The *model* (full-state
+manifest per snapshot, stats per file, spec-id per file) is unchanged by
+that representation.  Nothing below ever reads data files.
 
 Reference behaviors this model serves (iceberg_trino_sqldemo.sql):
 snapshots/history/refs metadata tables (:74-82), time travel (:216),
@@ -305,43 +309,12 @@ class Snapshot:
 
 @dataclass
 class Manifest:
-    """Full live-file state at one snapshot."""
+    """A resolved list of files to scan — what ``reader.snapshot_df`` and
+    the pruners take.  Never a snapshot's state: that is always a
+    ``manifest_store.LazyManifest``."""
 
     data_files: list[DataFile]
     delete_files: list[DeleteFile]
-
-    def to_dict(self) -> dict:
-        return {
-            "data_files": [f.to_dict() for f in self.data_files],
-            "delete_files": [f.to_dict() for f in self.delete_files],
-        }
-
-    @staticmethod
-    def from_dict(d: dict) -> "Manifest":
-        return Manifest(
-            [DataFile.from_dict(f) for f in d["data_files"]],
-            [DeleteFile.from_dict(f) for f in d["delete_files"]],
-        )
-
-    def candidate_files(
-        self,
-        size_below: int,
-        modified_after_ms: int | None = None,
-        targeted: frozenset[str] | set[str] = frozenset(),
-    ) -> list["DataFile"]:
-        """Maintenance candidate selection: entries smaller than
-        ``size_below`` OR named in ``targeted``, optionally restricted to
-        those modified after ``modified_after_ms`` — the optimize()
-        predicate.  Eager manifests filter in Python; the lazy mirror
-        (manifest_store.LazyManifest.candidate_files) answers the same
-        question from segment columns without materializing the table."""
-        out = [
-            f for f in self.data_files
-            if f.file_size_bytes < size_below or f.path in targeted
-        ]
-        if modified_after_ms is not None:
-            out = [f for f in out if f.file_modified_ms > modified_after_ms]
-        return out
 
 
 # ---------------------------------------------------------------------------
@@ -698,33 +671,22 @@ class MetadataIO:
         return new_v
 
     # -- manifests --------------------------------------------------------
-    # Format 2 (round 6): a snapshot's manifest file is a small JSON
-    # MANIFEST LIST naming immutable parquet entry-SEGMENTS
-    # (manifest_store.py).  An append reuses the parent's segments and
-    # writes one delta segment — commit cost O(delta); a removal rewrites
-    # only the segments its paths live in (found via path prefixes).
-    # Format 1 (full-state JSON, "data_files" key) stays readable.
+    # A snapshot's manifest file is a small JSON MANIFEST LIST naming
+    # immutable parquet entry-SEGMENTS (manifest_store.py).  An append
+    # reuses the parent's segments and writes one delta segment — commit
+    # cost O(delta); a removal rewrites only the segments its paths live in
+    # (found via path prefixes).
 
     def write_manifest(self, snapshot_id: int, manifest) -> str:
-        """Write a snapshot manifest under a UNIQUE path.
+        """Write a snapshot manifest (a ``LazyManifest``) under a UNIQUE path.
 
         The uuid suffix is load-bearing for optimistic concurrency: two
         writers racing on the same table both pick the same next snapshot
         id, and manifests are written *before* the version-pointer CAS — an
         id-keyed filename would let the losing writer clobber the winner's
         committed manifest (silent data loss on its retry)."""
-        from iceberg_trino_sql_demo_spark.sources import manifest_store as ms
-
         os.makedirs(self.meta_dir, exist_ok=True)
-        if isinstance(manifest, ms.LazyManifest):
-            segments = self._apply_delta(manifest)
-        else:  # eager full list (CTAS REPLACE, legacy call sites)
-            segments = (
-                [ms.write_segment(self.location, manifest.data_files)]
-                if manifest.data_files
-                else []
-            )
-        segments = self._maybe_compact(segments)
+        segments = self._maybe_compact(self._apply_delta(manifest))
         rel = os.path.join(
             "metadata", f"snap-{snapshot_id}-{uuid.uuid4().hex[:8]}.json"
         )
@@ -793,17 +755,20 @@ class MetadataIO:
         return keep + [ms.write_segment(self.location, entries)]
 
     def read_manifest(self, snapshot: Snapshot):
+        """A snapshot's live-file state as a ``LazyManifest``.  A format-1
+        manifest (full-state JSON, written before the segment store) loads
+        as zero segments with every entry held as ``added``; the first
+        commit on top of it writes them out as a format-2 segment."""
         from iceberg_trino_sql_demo_spark.sources import manifest_store as ms
 
         with open(os.path.join(self.location, snapshot.manifest)) as fh:
             d = json.load(fh)
-        if "segments" in d:
-            return ms.LazyManifest(
-                self.location,
-                [ms.SegmentRef.from_dict(s) for s in d["segments"]],
-                [DeleteFile.from_dict(x) for x in d["delete_files"]],
-            )
-        return Manifest.from_dict(d)  # format 1 (pre-round-6 tables)
+        return ms.LazyManifest(
+            self.location,
+            [ms.SegmentRef.from_dict(s) for s in d.get("segments", ())],
+            [DeleteFile.from_dict(x) for x in d["delete_files"]],
+            added=[DataFile.from_dict(f) for f in d.get("data_files", ())],
+        )
 
     def manifest_artifacts(self, snapshot: Snapshot) -> list[str]:
         """Relative paths of every metadata artifact a snapshot's manifest

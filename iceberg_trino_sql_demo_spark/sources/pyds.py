@@ -336,7 +336,6 @@ class IceSegmentScanReader(DataSourceReader):
 
     def partitions(self) -> list[IceSegmentSlicePartition]:
         from iceberg_trino_sql_demo_spark.sources.manifest_store import (
-            LazyManifest,
             read_segment,
         )
         from iceberg_trino_sql_demo_spark.sources.metadata import MetadataIO
@@ -422,33 +421,25 @@ class IceSegmentScanReader(DataSourceReader):
                 "(Table.df does this)"
             )
 
-        if isinstance(manifest, LazyManifest):
-            removed = set(manifest.removed)
-            for seg in manifest.segments:
-                tbl = read_segment(self.location, seg)
-                paths = tbl.column("path").to_pylist()
-                sizes = tbl.column("file_size_bytes").to_pylist()
-                sids = tbl.column("schema_id").to_pylist()
-                if removed:  # committed manifests fold deltas; be safe
-                    kept = [
-                        t for t in zip(paths, sizes, sids) if t[0] not in removed
-                    ]
-                    paths = [p for p, _, _ in kept]
-                    sizes = [s for _, s, _ in kept]
-                    sids = [i for _, _, i in kept]
-                _pack(paths, sizes, sids)
-            if manifest.added:
-                _pack(
-                    [f.path for f in manifest.added],
-                    [f.file_size_bytes for f in manifest.added],
-                    [f.schema_id for f in manifest.added],
-                )
-        else:
-            files = manifest.data_files
+        removed = set(manifest.removed)
+        for seg in manifest.segments:
+            tbl = read_segment(self.location, seg)
+            paths = tbl.column("path").to_pylist()
+            sizes = tbl.column("file_size_bytes").to_pylist()
+            sids = tbl.column("schema_id").to_pylist()
+            if removed:  # committed manifests fold deltas; be safe
+                kept = [
+                    t for t in zip(paths, sizes, sids) if t[0] not in removed
+                ]
+                paths = [p for p, _, _ in kept]
+                sizes = [s for _, s, _ in kept]
+                sids = [i for _, _, i in kept]
+            _pack(paths, sizes, sids)
+        if manifest.added:
             _pack(
-                [f.path for f in files],
-                [f.file_size_bytes for f in files],
-                [f.schema_id for f in files],
+                [f.path for f in manifest.added],
+                [f.file_size_bytes for f in manifest.added],
+                [f.schema_id for f in manifest.added],
             )
         _flush()
         return parts

@@ -45,7 +45,7 @@ from pyspark.sql import types as T
 
 from iceberg_trino_sql_demo_spark.functions.trino import parse_ns_timestamp
 from iceberg_trino_sql_demo_spark.plans.predicates import parse_simple_predicates
-from iceberg_trino_sql_demo_spark.plans.pruning import Predicate, prune_files
+from iceberg_trino_sql_demo_spark.plans.pruning import Predicate
 from iceberg_trino_sql_demo_spark.sources.manifest_store import LazyManifest
 from iceberg_trino_sql_demo_spark.sources.metadata import (
     MAIN,
@@ -215,7 +215,10 @@ class Table:
         if properties:
             m.properties.update({k: str(v) for k, v in properties.items()})
         m.sort_order = list(sort_order or [])
-        t._append_files(df, operation="replace", ref=MAIN, base_manifest=Manifest([], []))
+        t._append_files(
+            df, operation="replace", ref=MAIN,
+            base_manifest=LazyManifest(t.location, [], []),
+        )
         return t
 
     # ------------------------------------------------------------------
@@ -250,8 +253,10 @@ class Table:
                 )
         return snap
 
-    def _manifest(self, snap: Snapshot | None) -> Manifest:
-        return Manifest([], []) if snap is None else self.io.read_manifest(snap)
+    def _manifest(self, snap: Snapshot | None) -> LazyManifest:
+        if snap is None:
+            return LazyManifest(self.location, [], [])
+        return self.io.read_manifest(snap)
 
     def df(
         self,
@@ -315,30 +320,29 @@ class Table:
                 # survivor list rides ONE parquet side file instead of an
                 # O(survivors) Py4J path handoff + JVM listing
                 out = self._pruned_scan_df(manifest, scan_cols)
-        elif isinstance(manifest, LazyManifest):
-            if (
-                not hidden
-                and snap is not None
-                and manifest.counts()[0] >= _PYDS_SCAN_FILES
-                and self._pyds_bytes_ok(
-                    manifest.counts()[0], manifest.total_bytes(),
-                    scan_cols,
-                )
-                and self._segment_scan_safe(manifest)
-            ):
-                # LARGE unpruned scan: plan from manifest segments via the
-                # ice_table DataSource — no per-file Python objects, no
-                # O(files) Py4J path handoff, no JVM file listing (sizes
-                # come from the manifest).  Measured: ~245 s saved at 10^6
-                # files (SCALING.md "End-to-end read path").
-                out = self._segment_scan_df(snap, manifest, scan_cols)
-            else:
-                # unpruned scan: lean materialization (no stats/partition
-                # json parsing — see manifest_store.scan_files) unless the
-                # hidden $partition column needs the full tuples
-                manifest = Manifest(
-                    manifest.scan_files(hidden=hidden), manifest.delete_files
-                )
+        elif (
+            not hidden
+            and snap is not None
+            and manifest.counts()[0] >= _PYDS_SCAN_FILES
+            and self._pyds_bytes_ok(
+                manifest.counts()[0], manifest.total_bytes(),
+                scan_cols,
+            )
+            and self._segment_scan_safe(manifest)
+        ):
+            # LARGE unpruned scan: plan from manifest segments via the
+            # ice_table DataSource — no per-file Python objects, no
+            # O(files) Py4J path handoff, no JVM file listing (sizes
+            # come from the manifest).  Measured: ~245 s saved at 10^6
+            # files (SCALING.md "End-to-end read path").
+            out = self._segment_scan_df(snap, manifest, scan_cols)
+        else:
+            # unpruned scan: lean materialization (no stats/partition
+            # json parsing — see manifest_store.scan_files) unless the
+            # hidden $partition column needs the full tuples
+            manifest = Manifest(
+                manifest.scan_files(hidden=hidden), manifest.delete_files
+            )
         if out is None:
             out = snapshot_df(self.spark, self.meta, manifest, hidden=hidden)
         if where:
@@ -579,19 +583,14 @@ class Table:
             return df.hint("broadcast")
         return df
 
-    def prune(self, manifest, predicates: list) -> Manifest:
+    def prune(self, manifest: LazyManifest, predicates: list) -> Manifest:
         """Manifest entries that may contain rows matching ALL predicates
-        (conservative; plans/pruning.py semantics).  Segment-backed
-        manifests take the three-stage path (summary skip -> vectorized
-        stats mask -> exact per-file check on survivors) and never
-        materialize non-candidate entries."""
-        if isinstance(manifest, LazyManifest):
-            return Manifest(
-                manifest.pruned(self.meta, predicates, self.spark),
-                manifest.delete_files,
-            )
+        (conservative; plans/pruning.py semantics), via the three-stage
+        path (summary skip -> vectorized stats mask -> exact per-file
+        check on survivors) that never materializes non-candidate
+        entries."""
         return Manifest(
-            prune_files(manifest.data_files, self.meta, predicates, self.spark),
+            manifest.pruned(self.meta, predicates, self.spark),
             manifest.delete_files,
         )
 
@@ -600,12 +599,8 @@ class Table:
         half of every insert (and the streaming-ingest hot path): O(delta)
         regardless of table size."""
         base = self._manifest(self._resolve(ref))
-        if isinstance(base, LazyManifest):
-            manifest = base.with_delta(added=list(entries))
-        else:
-            manifest = Manifest(base.data_files + list(entries), base.delete_files)
         return self._commit_snapshot(
-            manifest,
+            base.with_delta(added=list(entries)),
             "append",
             ref,
             summary={"added-data-files": len(entries)},
@@ -624,7 +619,7 @@ class Table:
 
     def _commit_snapshot(
         self,
-        manifest: Manifest,
+        manifest: LazyManifest,
         operation: str,
         ref: str,
         summary: dict | None = None,
@@ -656,23 +651,19 @@ class Table:
         new_dels = {d.path for d in manifest.delete_files}
         added_dels = [d for d in manifest.delete_files if d.path not in base_del_paths]
         removed_dels = base_del_paths - new_dels
-        if isinstance(manifest, LazyManifest):
-            # the delta was RECORDED by the planner (with_delta) — no base
-            # materialization, no path-set diff: this is what makes an
-            # append O(delta) regardless of how many files the table holds
-            added_data = list(manifest.added)
-            removed_data = set(manifest.removed)
-            removed_records = dict(manifest.removed)
-        else:
-            base_paths = {f.path for f in base.data_files}
-            new_data = {f.path for f in manifest.data_files}
-            added_data = [f for f in manifest.data_files if f.path not in base_paths]
-            removed_data = base_paths - new_data
-            removed_records = {
-                f.path: f.record_count
-                for f in base.data_files
-                if f.path in removed_data
-            }
+        # the delta was RECORDED by the planner (with_delta) — no base
+        # materialization, no path-set diff: this is what makes an
+        # append O(delta) regardless of how many files the table holds.
+        # A format-1 base holds its live entries as ``added``: those are
+        # state, not delta, and must not be re-applied on a rebase.
+        held = {f.path for f in base.added}
+        added_data = [f for f in manifest.added if f.path not in held]
+        kept = {f.path for f in manifest.added}
+        removed_records = dict(manifest.removed)
+        removed_records.update(
+            (f.path, f.record_count) for f in base.added if f.path not in kept
+        )
+        removed_data = set(removed_records)
         last_err: CommitConflict | None = None
         for attempt in range(self.COMMIT_RETRIES):
             if attempt:
@@ -705,11 +696,7 @@ class Table:
                 # append throughput independent of table size.
                 live_data: set[str] | None = None
                 if removed_data or removed_dels or added_dels:
-                    live_data = (
-                        latest.data_paths()
-                        if isinstance(latest, LazyManifest)
-                        else {f.path for f in latest.data_files}
-                    )
+                    live_data = latest.data_paths()
                 if live_data is not None and not (
                     removed_data <= live_data and removed_dels <= live_dels
                 ):
@@ -759,25 +746,18 @@ class Table:
                 new_del_list = [
                     d for d in latest.delete_files if d.path not in removed_dels
                 ] + added_dels
-                if isinstance(latest, LazyManifest):
-                    manifest = LazyManifest(
-                        latest.location,
-                        latest.segments,
-                        new_del_list,
-                        added=added_data,
-                        removed=removed_records,
-                    )
-                else:
-                    manifest = Manifest(
-                        [f for f in latest.data_files if f.path not in removed_data]
-                        + added_data,
-                        new_del_list,
-                    )
+                manifest = LazyManifest(
+                    latest.location,
+                    latest.segments,
+                    new_del_list,
+                    added=latest.added + added_data,
+                    removed=removed_records,
+                )
         raise last_err  # type: ignore[misc]
 
     def _try_commit_snapshot(
         self,
-        manifest: Manifest,
+        manifest: LazyManifest,
         operation: str,
         ref: str,
         summary: dict | None = None,
@@ -800,19 +780,14 @@ class Table:
                 out.append(f)
             return out
 
-        if isinstance(manifest, LazyManifest):
-            manifest = LazyManifest(
-                manifest.location,
-                manifest.segments,
-                manifest.delete_files,
-                added=_fix(manifest.added),
-                removed=manifest.removed,
-            )
-            n_files, n_records = manifest.counts()
-        else:
-            manifest = Manifest(_fix(manifest.data_files), manifest.delete_files)
-            n_files = len(manifest.data_files)
-            n_records = sum(f.record_count for f in manifest.data_files)
+        manifest = LazyManifest(
+            manifest.location,
+            manifest.segments,
+            manifest.delete_files,
+            added=_fix(manifest.added),
+            removed=manifest.removed,
+        )
+        n_files, n_records = manifest.counts()
         rel = self.io.write_manifest(sid, manifest)
         snap = Snapshot(
             snapshot_id=sid,
@@ -888,7 +863,7 @@ class Table:
         df: DataFrame,
         operation: str,
         ref: str,
-        base_manifest: Manifest | None = None,
+        base_manifest: LazyManifest | None = None,
         summary: dict | None = None,
     ) -> Snapshot:
         m = self.meta
@@ -903,11 +878,7 @@ class Table:
         self._enrich_blooms(new_files)
         summary = {"added-data-files": len(new_files),
                    "added-records": sum(f.record_count for f in new_files), **(summary or {})}
-        manifest = (
-            base.with_delta(added=new_files)
-            if isinstance(base, LazyManifest)
-            else Manifest(base.data_files + new_files, base.delete_files)
-        )
+        manifest = base.with_delta(added=new_files)
         # conflict handling lives in _commit_snapshot (rebase + retry);
         # a CTAS REPLACE (explicit empty base_manifest, schema swap) is the
         # one shape that cannot be rebased and fails fast instead
@@ -1061,35 +1032,23 @@ class Table:
                 if m.spec.fields else "all"
             ),
         }
-        if isinstance(base, LazyManifest):
-            out = base.with_delta(
-                added=new_files, removed=removed, delete_files=kept_deletes
-            )
-        else:
-            out = Manifest(
-                [f for f in base.data_files if f.path not in removed_paths]
-                + new_files,
-                kept_deletes,
-            )
+        out = base.with_delta(
+            added=new_files, removed=removed, delete_files=kept_deletes
+        )
         return self._commit_snapshot(out, "overwrite", ref, summary, rebase=False)
 
     # ------------------------------------------------------------------
     # row-level DML (SURVEY.md §3.3)
     # ------------------------------------------------------------------
     def _affected_files(
-        self, manifest: Manifest, cond: Column, where_text: str | None
+        self, manifest: LazyManifest, cond: Column, where_text: str | None
     ) -> list[DataFile]:
         """Prune by predicate, then run one narrow Spark job to find files
-        that truly contain matches (driver <-> executor round trip)."""
+        that truly contain matches (driver <-> executor round trip).
+        Candidates come out of the three-stage prune without materializing
+        the rest of the table's entries."""
         preds = parse_simple_predicates(where_text) if where_text else []
-        if isinstance(manifest, LazyManifest):
-            # segment-backed: candidates come out of the three-stage prune
-            # without materializing the rest of the table's entries
-            cands = manifest.pruned(self.meta, preds, self.spark)
-        else:
-            cands = manifest.data_files
-            if preds:
-                cands = prune_files(cands, self.meta, preds)
+        cands = manifest.pruned(self.meta, preds, self.spark)
         if not cands:
             return []
         probe = snapshot_df(
@@ -1106,17 +1065,9 @@ class Table:
         delete file from the ref's manifest.  No file IO, no Spark job —
         the files stay on disk for time travel/rollback and age out via
         expire_snapshots, exactly like any other replaced snapshot."""
-        base = self._manifest(self._resolve(ref))
-        if isinstance(base, LazyManifest):
-            n, rec = base.counts()
-            empty = LazyManifest(self.location, [], [])
-        else:
-            n, rec = len(base.data_files), sum(
-                f.record_count for f in base.data_files
-            )
-            empty = Manifest([], [])
+        n, rec = self._manifest(self._resolve(ref)).counts()
         return self._commit_snapshot(
-            empty,
+            LazyManifest(self.location, [], []),
             "delete",
             ref,
             {
@@ -1181,12 +1132,7 @@ class Table:
         seq = self.meta.last_sequence_number + 1
         entries = self._write_equality_delete(keys_df, key_cols, seq)
         base = self._manifest(self._resolve(ref))
-        new_dels = base.delete_files + entries
-        manifest = (
-            base.with_delta(delete_files=new_dels)
-            if isinstance(base, LazyManifest)
-            else Manifest(base.data_files, new_dels)
-        )
+        manifest = base.with_delta(delete_files=base.delete_files + entries)
         return self._commit_snapshot(
             manifest,
             "delete",
@@ -1235,11 +1181,8 @@ class Table:
         )
         self._enrich_blooms(new_files)
         base = self._manifest(self._resolve(ref))
-        new_dels = base.delete_files + entries
-        manifest = (
-            base.with_delta(added=new_files, delete_files=new_dels)
-            if isinstance(base, LazyManifest)
-            else Manifest(base.data_files + new_files, new_dels)
+        manifest = base.with_delta(
+            added=new_files, delete_files=base.delete_files + entries
         )
         return self._commit_snapshot(
             manifest,
@@ -1274,10 +1217,7 @@ class Table:
         max_seq = max(d.sequence_number for d in eq)
         files = [f for f in manifest.data_files if f.sequence_number < max_seq]
         stripped = [d for d in manifest.delete_files if d.content != "equality"]
-        if isinstance(manifest, LazyManifest):
-            base = manifest.with_delta(delete_files=stripped)
-        else:
-            base = Manifest(manifest.data_files, stripped)
+        base = manifest.with_delta(delete_files=stripped)
         if not files:
             return self._commit_snapshot(
                 base, "replace", ref,
@@ -1320,11 +1260,7 @@ class Table:
         others = [d for d in manifest.delete_files if d not in pos]
         # scope to LIVE data files: tombstones referencing rewritten /
         # removed files are inert and must not survive consolidation
-        live = (
-            manifest.data_paths()
-            if isinstance(manifest, LazyManifest)
-            else {f.path for f in manifest.data_files}
-        )
+        live = manifest.data_paths()
         covered = sorted(
             live & {p for d in pos for p in d.referenced_files}
         )
@@ -1351,10 +1287,7 @@ class Table:
                 )
             )
             summary["dv-tombstones"] = total
-        if isinstance(manifest, LazyManifest):
-            out = manifest.with_delta(delete_files=new_dels)
-        else:
-            out = Manifest(manifest.data_files, new_dels)
+        out = manifest.with_delta(delete_files=new_dels)
         return self._commit_snapshot(out, "replace", ref, summary)
 
     def delete(self, where: str, ref: str = MAIN) -> Snapshot:
@@ -1376,7 +1309,7 @@ class Table:
         return self._write_position_deletes(manifest, affected, matches, "delete", ref)
 
     def _positions_for(
-        self, cond: Column, files: list[DataFile], manifest: Manifest
+        self, cond: Column, files: list[DataFile], manifest: LazyManifest
     ) -> DataFrame:
         """(file_path URI, pos) of rows matching cond within ``files``,
         honouring already-applied MoR deletes."""
@@ -1444,7 +1377,7 @@ class Table:
 
     def _write_position_deletes(
         self,
-        manifest: Manifest,
+        manifest: LazyManifest,
         affected: list[DataFile],
         matches: DataFrame,
         operation: str,
@@ -1490,12 +1423,10 @@ class Table:
             )
             new_files = [DataFile(**{**f.to_dict(), "has_lineage": True}) for f in new_files]
             self._enrich_blooms(new_files)
-        new_del_list = manifest.delete_files + entries
-        if isinstance(manifest, LazyManifest):
-            # MoR leaves the data side untouched: pure O(delta) commit
-            out = manifest.with_delta(added=new_files, delete_files=new_del_list)
-        else:
-            out = Manifest(manifest.data_files + new_files, new_del_list)
+        # MoR leaves the data side untouched: pure O(delta) commit
+        out = manifest.with_delta(
+            added=new_files, delete_files=manifest.delete_files + entries
+        )
         return self._commit_snapshot(
             out, operation, ref,
             {"added-delete-files": len(entries),
@@ -1504,7 +1435,7 @@ class Table:
         )
 
     def _read_files_with_lineage(
-        self, manifest: Manifest, files: list[DataFile]
+        self, manifest: LazyManifest, files: list[DataFile]
     ) -> DataFrame:
         """Rows of ``files`` (deletes applied) with _row_id/_last_seq kept —
         the input of every CoW rewrite, so lineage survives rewrites."""
@@ -1515,7 +1446,7 @@ class Table:
 
     def _rewrite_files(
         self,
-        manifest: Manifest,
+        manifest: LazyManifest,
         replaced: list[DataFile],
         new_df: DataFrame,
         operation: str,
@@ -1552,14 +1483,10 @@ class Table:
             if d.content == "equality"
             or any(p not in replaced_paths for p in d.referenced_files)
         ]
-        if isinstance(manifest, LazyManifest):
-            # only segments holding replaced entries get rewritten
-            out = manifest.with_delta(
-                added=new_files, removed=replaced, delete_files=kept_dels
-            )
-        else:
-            kept = [f for f in manifest.data_files if f.path not in replaced_paths]
-            out = Manifest(kept + new_files, kept_dels)
+        # only segments holding replaced entries get rewritten
+        out = manifest.with_delta(
+            added=new_files, removed=replaced, delete_files=kept_dels
+        )
         return self._commit_snapshot(
             out, operation, ref,
             {"removed-data-files": len(replaced),
@@ -2087,10 +2014,8 @@ class Table:
         and costs one manifest write."""
         m = self.meta
         snap = m.snapshot_by_id(snapshot_id)
-        parent = (
-            self._manifest(m.snapshot_by_id(snap.parent_id))
-            if snap.parent_id is not None
-            else Manifest([], [])
+        parent = self._manifest(
+            None if snap.parent_id is None else m.snapshot_by_id(snap.parent_id)
         )
         child = self._manifest(snap)
         if {d.path for d in child.delete_files} != {
@@ -2101,11 +2026,11 @@ class Table:
                 "DELETE/UPDATE/MERGE); only append and dynamic-overwrite "
                 "snapshots can be cherry-picked"
             )
-        parent_paths = {f.path for f in parent.data_files}
+        parent_paths = parent.data_paths()
         added = [f for f in child.data_files if f.path not in parent_paths]
-        removed = parent_paths - {f.path for f in child.data_files}
+        removed = parent_paths - child.data_paths()
         base = self._manifest(self._resolve(ref))
-        base_paths = {f.path for f in base.data_files}
+        base_paths = base.data_paths()
         if not removed <= base_paths:
             raise ValueError(
                 "cherrypick: snapshot replaces file(s) no longer live on "
@@ -2117,10 +2042,8 @@ class Table:
                 f"cherrypick: added file(s) already live on {ref!r} "
                 f"(already picked or fast-forwarded): {dup[:3]}"
             )
-        manifest = Manifest(
-            [f for f in base.data_files if f.path not in removed] + added,
-            base.delete_files,
-        )
+        gone = [f for f in base.data_files if f.path in removed] if removed else []
+        manifest = base.with_delta(added=added, removed=gone)
         summary = {
             "cherrypicked-from": str(snapshot_id),
             "added-data-files": len(added),
@@ -2145,7 +2068,7 @@ class Table:
         ml = self._manifest(self._resolve(left))
         mr = self._manifest(self._resolve(right))
 
-        def delmap(man: Manifest) -> dict[str, frozenset]:
+        def delmap(man: LazyManifest) -> dict[str, frozenset]:
             mp: dict[str, frozenset] = {f.path: frozenset() for f in man.data_files}
             for d in man.delete_files:
                 for p in d.referenced_files:
@@ -2228,7 +2151,9 @@ class Table:
         src = self._manifest(self._resolve(MAIN))
         if src.data_files or src.delete_files:
             t._commit_snapshot(
-                Manifest(list(src.data_files), list(src.delete_files)),
+                t._manifest(None).with_delta(
+                    added=src.data_files, delete_files=src.delete_files
+                ),
                 "append",
                 MAIN,
                 {"cloned-from": self.location,
@@ -2372,11 +2297,7 @@ class Table:
         live_artifacts: set[str] = set()
         for s in kept:
             man = self.io.read_manifest(s)
-            live_files.update(
-                man.data_paths()
-                if isinstance(man, LazyManifest)
-                else {f.path for f in man.data_files}
-            )
+            live_files.update(man.data_paths())
             live_files.update(
                 p for d in man.delete_files for p in d.artifact_paths()
             )
@@ -2391,13 +2312,8 @@ class Table:
         prefix = os.path.join(self.location, "")
         for s in dropped:
             man = self.io.read_manifest(s)
-            data_paths = (
-                man.data_paths()
-                if isinstance(man, LazyManifest)
-                else {f.path for f in man.data_files}
-            )
             del_paths = [p for d in man.delete_files for p in d.artifact_paths()]
-            for p in list(data_paths) + del_paths:
+            for p in list(man.data_paths()) + del_paths:
                 if own_only and not p.startswith(prefix):
                     continue
                 if p not in live_files and os.path.exists(p):
@@ -2468,12 +2384,7 @@ class Table:
                 raise ValueError(
                     f"add_files: {df_entry.path} lacks schema columns "
                     f"{sorted(missing)}")
-        base = self._manifest(self._resolve(ref))
-        manifest = (
-            base.with_delta(added=new_files)
-            if isinstance(base, LazyManifest)
-            else Manifest(base.data_files + new_files, base.delete_files)
-        )
+        manifest = self._manifest(self._resolve(ref)).with_delta(added=new_files)
         summary = {
             "added-data-files": len(new_files),
             "added-records": sum(f.record_count for f in new_files),
@@ -2493,11 +2404,7 @@ class Table:
         referenced: set[str] = set()
         for s in self.meta.all_snapshots():
             man = self.io.read_manifest(s)
-            referenced.update(
-                man.data_paths()
-                if isinstance(man, LazyManifest)
-                else {f.path for f in man.data_files}
-            )
+            referenced.update(man.data_paths())
             referenced.update(
                 p for d in man.delete_files for p in d.artifact_paths()
             )

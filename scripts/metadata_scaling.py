@@ -37,11 +37,8 @@ from datetime import date, timedelta
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from iceberg_trino_sql_demo_spark.plans.pruning import Predicate, prune_files
-from iceberg_trino_sql_demo_spark.sources.metadata import (
-    MAIN,
-    DataFile,
-    Manifest,
-)
+from iceberg_trino_sql_demo_spark.sources.manifest_store import LazyManifest
+from iceberg_trino_sql_demo_spark.sources.metadata import MAIN, DataFile
 from iceberg_trino_sql_demo_spark.sources.table import Table
 
 POINTS = [
@@ -98,7 +95,9 @@ def build_table(location: str, n: int) -> Table:
         None, location, COLUMNS, partitioning=["month(l_orderdate)"]
     )
     entries = [synth_entry(i, n) for i in range(n)]
-    t._commit_snapshot(Manifest(entries, []), "append", MAIN)
+    t._commit_snapshot(
+        LazyManifest(t.location, [], [], added=entries), "append", MAIN
+    )
     return t
 
 
@@ -257,7 +256,9 @@ def _build_real_table(loc: str, n: int):
         None, os.path.join(loc, "tbl"), COLUMNS,
         partitioning=["month(l_orderdate)"],
     )
-    t._commit_snapshot(Manifest(entries, []), "append", MAIN)
+    t._commit_snapshot(
+        LazyManifest(t.location, [], [], added=entries), "append", MAIN
+    )
     return t
 
 

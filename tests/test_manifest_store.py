@@ -3,8 +3,7 @@
 What must hold:
 - segment write/read round-trips every DataFile field exactly;
 - a LazyManifest delta composes correctly (add, remove, cancel-add,
-  re-add-after-remove) and materializes to the same multiset an eager
-  manifest would;
+  re-add-after-remove) and materializes to the expected entry multiset;
 - the three-stage prune returns EXACTLY the files that contain matching
   rows or can't be excluded — and never more than the pure-exact path
   (``prune_files``) keeps;
@@ -13,7 +12,8 @@ What must hold:
 - compaction keeps the segment count bounded without changing state;
 - expire_snapshots never unlinks a segment a kept snapshot still
   references (segments are shared across snapshots);
-- format-1 (full-state JSON) manifests remain readable.
+- format-1 (full-state JSON) manifests remain readable, and the next
+  commit rewrites them as format 2.
 """
 
 from __future__ import annotations
@@ -36,7 +36,6 @@ from iceberg_trino_sql_demo_spark.sources.manifest_store import (
 from iceberg_trino_sql_demo_spark.sources.metadata import (
     MAIN,
     DataFile,
-    Manifest,
     MetadataIO,
 )
 from iceberg_trino_sql_demo_spark.sources.table import Table
@@ -70,7 +69,10 @@ def entry(i: int, month: int = 1) -> DataFile:
 def make_table(tmp_path, n=60) -> Table:
     t = Table.create(None, str(tmp_path / "t"), COLS, partitioning=["month(d)"])
     t._commit_snapshot(
-        Manifest([entry(i, month=(i % 12) + 1) for i in range(n)], []),
+        LazyManifest(
+            t.location, [], [],
+            added=[entry(i, month=(i % 12) + 1) for i in range(n)],
+        ),
         "append",
         MAIN,
     )
@@ -199,22 +201,59 @@ def test_expire_keeps_shared_segments(tmp_path):
     assert len(man.data_files) == 22
 
 
+def _legacy_head(t: Table, entries: list[DataFile]) -> str:
+    """Write ``entries`` as a format-1 (full-state JSON) manifest and point
+    main's head snapshot at it; returns the manifest's relative path."""
+    rel = os.path.join("metadata", "snap-legacy.json")
+    with open(os.path.join(t.location, rel), "w") as fh:
+        json.dump(
+            {"data_files": [e.to_dict() for e in entries], "delete_files": []},
+            fh, default=str,
+        )
+    snap = t._resolve()
+    t.meta.snapshots[-1] = type(snap)(**{**snap.to_dict(), "manifest": rel})
+    t._commit_metadata_only()
+    return rel
+
+
 def test_format1_manifest_still_readable(tmp_path):
-    """A pre-round-6 full-state JSON manifest loads as an eager Manifest
-    and its snapshot remains queryable metadata-side."""
+    """A pre-round-6 full-state JSON manifest loads with the same entries,
+    its artifacts are just the list file, and the next commit on top of
+    it writes a format-2 list backed by segments."""
     t = make_table(tmp_path, n=5)
     io = MetadataIO(t.location)
     entries = [entry(i) for i in range(5)]
-    rel = os.path.join("metadata", "snap-legacy.json")
-    with open(os.path.join(t.location, rel), "w") as fh:
-        json.dump(Manifest(entries, []).to_dict(), fh, default=str)
-    snap = t._resolve()
-    legacy_snap = type(snap)(**{**snap.to_dict(), "manifest": rel})
+    rel = _legacy_head(t, entries)
+    legacy_snap = t._resolve()
     man = io.read_manifest(legacy_snap)
-    assert isinstance(man, Manifest)
     assert [f.path for f in man.data_files] == [e.path for e in entries]
     # artifacts of a legacy manifest: just the file itself
     assert io.manifest_artifacts(legacy_snap) == [rel]
+
+    t.append_entries([entry(500)])
+    head = t.refresh()._resolve()
+    with open(os.path.join(t.location, head.manifest)) as fh:
+        doc = json.load(fh)
+    assert doc["format"] == 2 and doc["segments"]
+    assert {f.path for f in t._manifest(head).data_files} == {
+        e.path for e in entries
+    } | {entry(500).path}
+
+
+def test_rebase_over_format1_head_adds_legacy_entries_once(tmp_path):
+    """A format-1 head holds its entries as ``added``; two writers that
+    both append onto it must not re-add them when the loser rebases onto
+    the winner's format-2 state."""
+    t = make_table(tmp_path, n=5)
+    entries = [entry(i) for i in range(5)]
+    _legacy_head(t, entries)
+    a, b = Table(None, t.location), Table(None, t.location)
+    a.append_entries([entry(600)])
+    b.append_entries([entry(601)])  # CAS loses to a, rebases
+    man = t.refresh()._manifest(t._resolve())
+    assert sorted(f.path for f in man.data_files) == sorted(
+        [e.path for e in entries] + [entry(600).path, entry(601).path]
+    )
 
 
 def test_lazy_manifest_data_paths_matches_materialization(tmp_path):
@@ -237,11 +276,9 @@ def test_files_meta_table_served_from_segments(tmp_path):
     t = make_table(tmp_path, n=30)
     t.spark = spark
     fast = metadata_table(t, "files")
-    # force the slow path by materializing an eager manifest
-    from iceberg_trino_sql_demo_spark.sources.metadata import Manifest
-
+    # force the slow path: the same state held as zero segments
     man = t._manifest(t._resolve())
-    eager = Manifest(man.data_files, man.delete_files)
+    eager = LazyManifest(t.location, [], man.delete_files, added=man.data_files)
 
     class _Shim:
         meta = t.meta
@@ -365,7 +402,9 @@ def test_vectorized_prune_property(tmp_path):
             file_modified_ms=1_700_000_000_000,
         )
         entries.append(e)
-    t._commit_snapshot(Manifest(entries, []), "append", MAIN)
+    t._commit_snapshot(
+        LazyManifest(t.location, [], [], added=entries), "append", MAIN
+    )
     man = t._manifest(t._resolve())
     assert isinstance(man, LazyManifest)
 
@@ -408,7 +447,9 @@ def test_remove_orphans_sweeps_metadata_losers(tmp_path):
 
     # simulate a losing attempt: write a manifest (list + segment) that no
     # snapshot will ever reference
-    t.io.write_manifest(999, Manifest([entry(900), entry(901)], []))
+    t.io.write_manifest(
+        999, LazyManifest(t.location, [], [], added=[entry(900), entry(901)])
+    )
     orphaned = set(os.listdir(meta_dir)) - before
     assert orphaned, "the losing attempt must have written artifacts"
     # age everything so the cutoff admits deletion
