@@ -33,7 +33,12 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from iceberg_trino_sql_demo_spark.operators import pins, register
-from iceberg_trino_sql_demo_spark.session import parquet_row_count, pinned_conf, table_path
+from iceberg_trino_sql_demo_spark.session import (
+    parquet_row_count,
+    pinned_conf,
+    read_parquet,
+    table_path,
+)
 
 #: number of minhash permutations and LSH banding layout (8 bands x 4 rows).
 #: ROWS_PER_BAND (= r) fixes the per-band collision curve (s^4), so halving
@@ -62,7 +67,7 @@ MAX_DF_FRACTION = 0.01
 
 
 def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.read.parquet(table_path(sf_dir, "documents"))
+    return read_parquet(spark, table_path(sf_dir, "documents"))
 
 
 def _corpus_with_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -763,7 +768,7 @@ def emb_corpus_with_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
     the embedding-side twin of _corpus_with_dups, replicated verbatim in
     _EMB_CORPUS_SQL.  ONE definition shared by every embedding-dedup
     operator and the scaling diagnostics."""
-    e = spark.read.parquet(table_path(sf_dir, "embeddings")).select(
+    e = read_parquet(spark, table_path(sf_dir, "embeddings")).select(
         "vec_id", "embedding"
     )
     return e.unionAll(

@@ -27,7 +27,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from iceberg_trino_sql_demo_spark.operators import register
-from iceberg_trino_sql_demo_spark.session import table_path
+from iceberg_trino_sql_demo_spark.session import read_parquet, table_path
 
 FEATURE_SCHEMA = (
     "doc_id bigint, media_type string, n_bytes bigint, "
@@ -39,7 +39,7 @@ def media_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Synthesize an opaque-binary media table from documents: payload =
     utf-8 bytes (stands in for jpeg/wav blobs), plus typed metadata — the
     shape a real ingest would produce."""
-    d = spark.read.parquet(table_path(sf_dir, "documents"))
+    d = read_parquet(spark, table_path(sf_dir, "documents"))
     return d.select(
         "doc_id",
         F.encode("text", "utf-8").alias("media"),
@@ -377,7 +377,7 @@ def multimodal_audio_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
             rows = []
 
     audio = (
-        spark.read.parquet(table_path(sf_dir, "documents"))
+        read_parquet(spark, table_path(sf_dir, "documents"))
         .select("doc_id")
         .where(F.col("doc_id") % 3 == 1)
     )
@@ -434,7 +434,7 @@ def multimodal_audio_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def multimodal_payload_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = spark.read.parquet(table_path(sf_dir, "documents")).select("doc_id", "text")
+    d = read_parquet(spark, table_path(sf_dir, "documents")).select("doc_id", "text")
     dup = d.where(F.col("doc_id") % 10 == 0).select(
         (F.col("doc_id") + 1000000).alias("doc_id"), "text"
     )
@@ -521,7 +521,7 @@ def multimodal_payload_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def multimodal_ahash_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = (
-        spark.read.parquet(table_path(sf_dir, "documents"))
+        read_parquet(spark, table_path(sf_dir, "documents"))
         .select("doc_id", "text")
         .where(F.length("text") >= 64)
     )

@@ -28,11 +28,11 @@ from iceberg_trino_sql_demo_spark.functions.trino import (
     trino_date_format,
     trino_round,
 )
-from iceberg_trino_sql_demo_spark.session import parquet_row_count, table_path
+from iceberg_trino_sql_demo_spark.session import parquet_row_count, read_parquet, table_path
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return spark.read.parquet(table_path(sf_dir, name))
+    return read_parquet(spark, table_path(sf_dir, name))
 
 
 # ---------------------------------------------------------------------------

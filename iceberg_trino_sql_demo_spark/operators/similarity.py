@@ -23,7 +23,7 @@ from pyspark.sql import functions as F
 
 from iceberg_trino_sql_demo_spark.functions.trino import iround_long
 from iceberg_trino_sql_demo_spark.operators import pins, register
-from iceberg_trino_sql_demo_spark.session import parquet_row_count, table_path
+from iceberg_trino_sql_demo_spark.session import parquet_row_count, read_parquet, table_path
 
 K = 10
 N_PLANES = 8
@@ -32,7 +32,7 @@ PROBE_RADIUS = 3
 
 
 def _emb(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.read.parquet(table_path(sf_dir, "embeddings"))
+    return read_parquet(spark, table_path(sf_dir, "embeddings"))
 
 
 #: embeddings dimension in the testdata (uniform across sf0.001/0.01/0.1)
@@ -1169,7 +1169,7 @@ def ann_filtered_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     qv = _query_vector(spark, sf_dir)
     keep = (
-        spark.read.parquet(table_path(sf_dir, "documents"))
+        read_parquet(spark, table_path(sf_dir, "documents"))
         .where(F.col("lang") == "en")
         .select(F.col("doc_id").alias("vec_id"))
     )

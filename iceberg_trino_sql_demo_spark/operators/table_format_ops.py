@@ -22,6 +22,7 @@ from pyspark.sql import DataFrame, SparkSession
 from iceberg_trino_sql_demo_spark.functions.trino import iround_long
 from iceberg_trino_sql_demo_spark.operators import register
 from iceberg_trino_sql_demo_spark.operators.relational import customer_pipeline
+from iceberg_trino_sql_demo_spark.session import read_parquet, table_path
 from iceberg_trino_sql_demo_spark.sources.table import Table
 
 # The CTAS source (reference :19-40) as DuckDB SQL — shared prefix of most
@@ -1248,7 +1249,7 @@ def collect_runtime_filter_keys(dim, key_col: str, max_keys: int = 1000):
 def ice_runtime_filter_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import functions as F
 
-    orders = spark.read.parquet(os.path.join(sf_dir, "orders.parquet")).select(
+    orders = read_parquet(spark, table_path(sf_dir, "orders")).select(
         F.col("o_orderkey").alias("orderkey"),
         F.col("o_custkey").alias("custkey"),
         F.col("o_totalprice").alias("totalprice"),
@@ -1259,7 +1260,7 @@ def ice_runtime_filter_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         properties={"merge_mode": "merge-on-read"},
     )
     dim = (
-        spark.read.parquet(os.path.join(sf_dir, "customer.parquet"))
+        read_parquet(spark, table_path(sf_dir, "customer"))
         .where(F.col("c_acctbal") > 9950)
         .select(F.col("c_custkey").alias("custkey"))
     )
@@ -2117,7 +2118,6 @@ _ICEBERG_FIX_CACHE: dict[str, str] = {}
     bench=False,
 )
 def ice_register_iceberg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from iceberg_trino_sql_demo_spark.session import table_path
     from iceberg_trino_sql_demo_spark.sources.catalog import Catalog
     from iceberg_trino_sql_demo_spark.sources.iceberg_fixture import (
         write_iceberg_fixture,
@@ -2127,7 +2127,7 @@ def ice_register_iceberg(spark: SparkSession, sf_dir: str) -> DataFrame:
     if loc is None:
         rows = [
             r.asDict()
-            for r in spark.read.parquet(table_path(sf_dir, "customer"))
+            for r in read_parquet(spark, table_path(sf_dir, "customer"))
             .selectExpr(
                 "c_custkey AS custkey",
                 "c_name AS name",
@@ -2173,7 +2173,6 @@ _ICEBERG_ORC_FIX_CACHE: dict[str, str] = {}
     bench=False,
 )
 def ice_register_iceberg_orc(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from iceberg_trino_sql_demo_spark.session import table_path
     from iceberg_trino_sql_demo_spark.sources.catalog import Catalog
     from iceberg_trino_sql_demo_spark.sources.iceberg_fixture import (
         write_iceberg_fixture,
@@ -2183,7 +2182,7 @@ def ice_register_iceberg_orc(spark: SparkSession, sf_dir: str) -> DataFrame:
     if loc is None:
         rows = [
             r.asDict()
-            for r in spark.read.parquet(table_path(sf_dir, "customer"))
+            for r in read_parquet(spark, table_path(sf_dir, "customer"))
             .selectExpr(
                 "c_custkey AS custkey",
                 "c_name AS name",
@@ -2231,7 +2230,6 @@ _ICEBERG_AVRO_FIX_CACHE: dict[str, str] = {}
     bench=False,
 )
 def ice_register_iceberg_avro(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from iceberg_trino_sql_demo_spark.session import table_path
     from iceberg_trino_sql_demo_spark.sources.catalog import Catalog
     from iceberg_trino_sql_demo_spark.sources.iceberg_fixture import (
         write_iceberg_fixture,
@@ -2241,7 +2239,7 @@ def ice_register_iceberg_avro(spark: SparkSession, sf_dir: str) -> DataFrame:
     if loc is None:
         rows = [
             r.asDict()
-            for r in spark.read.parquet(table_path(sf_dir, "customer"))
+            for r in read_parquet(spark, table_path(sf_dir, "customer"))
             .selectExpr(
                 "c_custkey AS custkey",
                 "c_name AS name",
@@ -2317,7 +2315,6 @@ _ICEBERG_V3_FIX_CACHE: dict[str, str] = {}
 def ice_register_iceberg_v3(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import functions as F
 
-    from iceberg_trino_sql_demo_spark.session import table_path
     from iceberg_trino_sql_demo_spark.sources.catalog import Catalog
     from iceberg_trino_sql_demo_spark.sources.iceberg_fixture import (
         write_iceberg_v3_fixture,
@@ -2327,7 +2324,7 @@ def ice_register_iceberg_v3(spark: SparkSession, sf_dir: str) -> DataFrame:
     if loc is None:
         rows = [
             r.asDict()
-            for r in spark.read.parquet(table_path(sf_dir, "customer"))
+            for r in read_parquet(spark, table_path(sf_dir, "customer"))
             .selectExpr(
                 "c_custkey AS custkey",
                 "c_name AS name",

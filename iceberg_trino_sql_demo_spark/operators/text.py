@@ -13,11 +13,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from iceberg_trino_sql_demo_spark.operators import register
-from iceberg_trino_sql_demo_spark.session import table_path
+from iceberg_trino_sql_demo_spark.session import read_parquet, table_path
 
 
 def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.read.parquet(table_path(sf_dir, "documents"))
+    return read_parquet(spark, table_path(sf_dir, "documents"))
 
 
 # ---------------------------------------------------------------------------

@@ -68,14 +68,14 @@ def derby_from_sf_dir(spark: SparkSession, db_dir: str, sf_dir: str,
     """Load the given testdata tables into an embedded Derby at
     ``db_dir`` (idempotent: an already-built database is reused) and
     return its JDBC URL."""
-    from iceberg_trino_sql_demo_spark.session import table_path
+    from iceberg_trino_sql_demo_spark.session import read_parquet, table_path
 
     url = derby_url(db_dir)
     marker = os.path.join(db_dir, ".published")
     if os.path.exists(marker):
         return url
     publish = {
-        t: spark.read.parquet(table_path(sf_dir, t)) for t in tables
+        t: read_parquet(spark, table_path(sf_dir, t)) for t in tables
     }
     publish_tables(spark, url, publish)
     with open(marker, "w") as fh:

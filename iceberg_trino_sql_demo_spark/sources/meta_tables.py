@@ -18,8 +18,22 @@ from datetime import datetime, timezone
 
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import from_arrow_type
 
+from iceberg_trino_sql_demo_spark.sources.manifest_store import _FIXED_COLS
 from iceberg_trino_sql_demo_spark.sources.metadata import MAIN
+
+#: The fixed segment columns the ``$files`` scan reads, typed up front so the
+#: scan runs no schema-inference job; the per-column stats columns vary
+#: between segments and stay unread.
+_FILES_SEGMENT_SCHEMA = T.StructType(
+    [
+        T.StructField(name, from_arrow_type(typ))
+        for name, typ in _FIXED_COLS
+        if name in ("path", "spec_id", "partition", "record_count",
+                    "file_size_bytes", "first_row_id", "sequence_number")
+    ]
+)
 
 
 def _ts(ms: int) -> datetime:
@@ -144,11 +158,11 @@ def metadata_table(table, kind: str) -> DataFrame:
             from pyspark.sql import functions as F
 
             segs = [os.path.join(m.location, s.path) for s in manifest.segments]
-            df = spark.read.parquet(*segs).select(
+            df = spark.read.schema(_FILES_SEGMENT_SCHEMA).parquet(*segs).select(
                 F.lit(0).cast("int").alias("content"),
                 F.col("path").alias("file_path"),
                 F.lit("PARQUET").alias("file_format"),
-                F.col("spec_id").cast("int").alias("spec_id"),
+                F.col("spec_id"),
                 F.col("partition"),
                 F.col("record_count"),
                 F.col("file_size_bytes").alias("file_size_in_bytes"),

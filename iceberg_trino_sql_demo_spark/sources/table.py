@@ -66,6 +66,7 @@ from iceberg_trino_sql_demo_spark.sources.metadata import (
 from iceberg_trino_sql_demo_spark.sources.reader import (
     LAST_SEQ,
     ROW_ID,
+    _to_uri,
     read_position_deletes,
     rows_at_positions,
     rows_matching_equality,
@@ -1390,10 +1391,14 @@ class Table:
         # matching millions of rows writes N delete files in parallel, and
         # each output file references a disjoint set of data files (tight
         # referenced_files -> precise delete-application at read time).
+        # The key is the file's position in ``affected`` (manifest order),
+        # not its path: paths hold random commit uuids, and the number of
+        # delete files a DML writes must not depend on them.
         # Explicit partition count (AQE honours user-specified numbers —
         # repartition(col) alone would be coalesced back to one tiny task).
         n_parts = max(1, min(len(affected), int(self.spark.conf.get("spark.sql.shuffle.partitions"))))
-        matches.repartition(n_parts, F.col("file_path")).write.mode("overwrite").parquet(ddir)
+        key = F.array_position(F.lit([_to_uri(f.path) for f in affected]), F.col("file_path"))
+        matches.repartition(n_parts, key).write.mode("overwrite").parquet(ddir)
         import pyarrow.parquet as pq
 
         entries: list[DeleteFile] = []

@@ -151,7 +151,8 @@ def harvest_files(
     src_type = {pt_name: next(c.type for c in schema.fields if c.name == t.source) for pt_name, t in pts}
     tmap = dict(pts)
     entries: list[DataFile] = []
-    for root, _dirs, files in os.walk(commit_dir):
+    for root, dirs, files in os.walk(commit_dir):
+        dirs.sort()  # manifest order must not depend on directory listing order
         for fn in sorted(files):
             if not fn.endswith(".parquet"):
                 continue

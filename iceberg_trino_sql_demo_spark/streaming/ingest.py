@@ -26,7 +26,12 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from iceberg_trino_sql_demo_spark.functions.trino import decimal_sum
-from iceberg_trino_sql_demo_spark.session import parquet_ts_unit, pinned_conf, table_path
+from iceberg_trino_sql_demo_spark.session import (
+    parquet_ts_unit,
+    pinned_conf,
+    read_parquet,
+    table_path,
+)
 
 EVENTS_SCHEMA = T.StructType(
     [
@@ -854,7 +859,7 @@ def stream_static_enrich(
     """
     unit = events_ts_unit(sf_dir)
     dim = (
-        spark.read.parquet(table_path(sf_dir, "customer"))
+        read_parquet(spark, table_path(sf_dir, "customer"))
         .select(
             F.col("c_custkey").alias("user_id"),
             F.col("c_mktsegment").alias("segment"),
