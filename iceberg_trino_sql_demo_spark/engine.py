@@ -30,6 +30,7 @@ from pyspark.sql import DataFrame, SparkSession
 from iceberg_trino_sql_demo_spark.functions.trino import translate_datetime_pattern
 from iceberg_trino_sql_demo_spark.plans.predicates import parse_simple_predicates
 from iceberg_trino_sql_demo_spark.sources.catalog import Catalog
+from iceberg_trino_sql_demo_spark.sources.metadata import column_sql
 from iceberg_trino_sql_demo_spark.sources.table import Table
 
 _FLAGS = re.IGNORECASE | re.DOTALL
@@ -528,8 +529,6 @@ class Engine:
         """INSERT INTO t [@branch] SELECT ... — positional column match
         (Trino semantics): the SELECT must produce exactly the table's
         column count; names are realigned by position."""
-        from pyspark.sql import functions as F
-
         t = self._table(m.group(1))
         df = self._select("SELECT" + m.group(3))
         fields = t.meta.schema.fields
@@ -538,8 +537,8 @@ class Engine:
                 f"INSERT INTO ... SELECT arity mismatch: query produces "
                 f"{len(df.columns)} columns, table has {len(fields)}"
             )
-        aligned = df.select(
-            *[F.col(c).alias(f.name) for c, f in zip(df.columns, fields)]
+        aligned = df.selectExpr(
+            *[column_sql(f.name, c) for c, f in zip(df.columns, fields)]
         )
         t.append(aligned, ref=m.group(2) or "main")
 
@@ -618,8 +617,6 @@ class Engine:
         """INSERT OVERWRITE t SELECT ... — dynamic partition overwrite
         (replaces exactly the partitions the SELECT produces; positional
         column match as in INSERT INTO ... SELECT)."""
-        from pyspark.sql import functions as F
-
         t = self._table(m.group(1))
         df = self._select("SELECT" + m.group(3))
         fields = t.meta.schema.fields
@@ -628,8 +625,8 @@ class Engine:
                 f"INSERT OVERWRITE ... SELECT arity mismatch: query produces "
                 f"{len(df.columns)} columns, table has {len(fields)}"
             )
-        aligned = df.select(
-            *[F.col(c).alias(f.name) for c, f in zip(df.columns, fields)]
+        aligned = df.selectExpr(
+            *[column_sql(f.name, c) for c, f in zip(df.columns, fields)]
         )
         t.dynamic_overwrite(aligned, ref=m.group(2) or "main")
 

@@ -61,6 +61,15 @@ def get_spark(app_name: str = "iceberg_trino_sql_demo_spark") -> SparkSession:
             os.environ.get("SPARK_GRAFT_ADAPTIVE", "true"),
         )
         .config("spark.sql.session.timeZone", "UTC")
+        # Call-site capture off.  With it on, PySpark wraps F.col and every
+        # Column method so that each call also fetches the active session,
+        # a conf and a JVM class and records its Python stack: ~7x the py4j
+        # round trips of the call itself (F.col("a").cast("long").alias("b")
+        # measured 35 vs 5).  The cost: an error raised when an action runs
+        # (e.g. an ANSI cast failure) no longer names the Python line that
+        # built the failing expression; analysis errors still raise at that
+        # line.  PySpark reads this once per process, so it is set here.
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         # wide plans (64-column MinHash/SimHash aggregates) must stay in
         # whole-stage codegen — the default 100-field ceiling silently

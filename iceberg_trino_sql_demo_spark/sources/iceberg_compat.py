@@ -910,7 +910,7 @@ def _legacy_layout_schemas(
 
     Iceberg readers decide default-fill per FILE (a parquet lacking
     field id X surfaces X's initial-default); the engine decides per
-    SCHEMA GROUP (``reader._group_projection`` fills defaults for
+    SCHEMA GROUP (``reader.projection_sql`` fills defaults for
     fields absent from the file group's schema).  Bridge: inspect each
     data file's parquet footer, and group files missing some defaulted
     column under a legacy ``TableSchema`` holding exactly the fields

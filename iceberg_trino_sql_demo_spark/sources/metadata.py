@@ -75,6 +75,69 @@ def spark_type(ddl: str) -> T.DataType:
     return _SPARK_TYPES[ddl]
 
 
+# SQL expression text for projections.  A ``selectExpr`` list costs the
+# driver one py4j round trip per element; building the same projection
+# from ``Column`` objects costs several per column (``F.col``, ``cast``,
+# ``alias`` are each a JVM call).
+
+
+def sql_ident(name: str) -> str:
+    """``name`` as a backtick-quoted SQL identifier."""
+    return "`" + name.replace("`", "``") + "`"
+
+
+def _type_text(dt: T.DataType) -> str:
+    if isinstance(dt, T.StructType):
+        return "struct<" + ",".join(
+            f"{sql_ident(f.name)}:{_type_text(f.dataType)}" for f in dt.fields) + ">"
+    if isinstance(dt, T.ArrayType):
+        return f"array<{_type_text(dt.elementType)}>"
+    if isinstance(dt, T.MapType):
+        return f"map<{_type_text(dt.keyType)},{_type_text(dt.valueType)}>"
+    return dt.simpleString()
+
+
+def sql_type(ddl: str) -> str:
+    """SQL type text that parses back to ``spark_type(ddl)``."""
+    return _type_text(spark_type(ddl))
+
+
+def _str_lit(s: str) -> str:
+    return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+
+def sql_literal(value: Any, ddl: str) -> str:
+    """``value`` as SQL text typed like an engine ``ddl`` column — the text
+    form of ``F.lit(value).cast(spark_type(ddl))`` (``parse_json`` for a
+    non-null variant)."""
+    if ddl == "variant" and value is not None:
+        return f"parse_json({_str_lit(value if isinstance(value, str) else json.dumps(value))})"
+    if value is None:
+        text = "NULL"
+    elif isinstance(value, bool):
+        text = "TRUE" if value else "FALSE"
+    elif isinstance(value, int):
+        text = str(value)
+    elif isinstance(value, float):
+        text = f"CAST({_str_lit(repr(value))} AS DOUBLE)"
+    else:
+        text = _str_lit(str(value))
+    return f"CAST({text} AS {sql_type(ddl)})"
+
+
+def column_sql(name: str, src: str | None, ddl: str | None = None, default: Any = None) -> str:
+    """One select-list entry: column ``src`` (cast to ``ddl`` when given)
+    named ``name``; with no ``src``, the literal ``default`` typed as
+    ``ddl``."""
+    if src is None:
+        expr = sql_literal(default, ddl)
+    elif ddl is None:
+        expr = sql_ident(src)
+    else:
+        expr = f"CAST({sql_ident(src)} AS {sql_type(ddl)})"
+    return f"{expr} AS {sql_ident(name)}"
+
+
 @dataclass(frozen=True)
 class NestedField:
     """A column with a stable id.

@@ -23,7 +23,7 @@ Scope: plain-DDL column types (variant / ns-timestamps keep their
 engine-specific dual representations on the ``Table.df`` path).  Schema
 evolution is handled IN the reader: each partition carries a column-id
 projection spec (take / cast / default-fill, computed driver-side from
-the file group's schema — the Arrow mirror of ``reader._group_projection``,
+the file group's schema — the Arrow mirror of ``reader.projection_sql``,
 reference :166-171/:181), so one ADD/DROP COLUMN no longer disqualifies
 the 10^6-file scan route.  Position deletes and deletion-vector packs are
 applied ABOVE this scan by ``Table.df`` (an anti-join against the delete
@@ -106,7 +106,7 @@ def _pa_type(ddl: str):
 def proj_spec(file_schema, current) -> list[tuple] | None:
     """Column-id projection spec (file physical layout -> current schema)
     for the Arrow-side reader — the same semantics as
-    ``reader._group_projection`` (match by id, never by name; missing ->
+    ``reader.projection_sql`` (match by id, never by name; missing ->
     initial_default; type change -> cast), expressed as picklable ops:
 
         ("take", pname, out_name)            — column present, type equal

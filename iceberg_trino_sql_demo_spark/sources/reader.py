@@ -6,10 +6,15 @@ builds ONE declarative Catalyst plan:
 - files are grouped by (schema_id, has_lineage) and each group is read with
   an explicit physical schema, then projected to the *current* schema by
   column id — adds fill ``initial_default`` (reference :166-171: old rows
-  surface the default, not NULL), drops are simply not selected (:181);
-- merge-on-read position deletes become a left-anti join applied ONLY to the
-  data files a delete file references — clean files keep an untouched scan
-  with full parquet pushdown (SURVEY.md §4 "MoR plan kept narrow");
+  surface the default, not NULL), drops are simply not selected (:181).
+  The projection is SQL text applied with one ``selectExpr`` per group, so
+  planning costs a few py4j round trips per group plus one per list
+  element, not several per column;
+- merge-on-read position deletes become ONE left-anti join above the union
+  of the groups holding data files a delete file references, reading only
+  the delete files whose ``referenced_files`` meet them — clean files keep
+  an untouched scan with full parquet pushdown (SURVEY.md §4 "MoR plan kept
+  narrow");
 - hidden columns (reference :65-72) derive from Spark's ``_metadata`` struct
   (_path, _file_modified_time, row positions) plus manifest-side joins for
   _partition and row lineage (first_row_id + row_index, v3 row lineage).
@@ -21,8 +26,6 @@ file-info side of every hidden-column join is manifest-sized and broadcast.
 from __future__ import annotations
 
 import json
-import os
-from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -33,7 +36,9 @@ from iceberg_trino_sql_demo_spark.sources.metadata import (
     Manifest,
     TableMetadata,
     TableSchema,
+    column_sql,
     spark_type,
+    sql_ident,
 )
 
 ROW_ID = "_row_id"
@@ -52,40 +57,106 @@ def _to_uri(path: str) -> str:
     return "file:" + path if path.startswith("/") else path
 
 
-def _default_lit(fld) -> F.Column:
-    """initial_default literal, typed like the column."""
-    v = fld.initial_default
-    if v is None:
-        return F.lit(None).cast(spark_type(fld.type))
-    if fld.type == "variant":
-        return F.parse_json(F.lit(v if isinstance(v, str) else json.dumps(v)))
-    return F.lit(v).cast(spark_type(fld.type))
+#: where a group scan's (file, position, mtime) come from: Spark's parquet
+#: ``_metadata`` struct, or the columns the ORC/Avro positional scans emit
+_PARQUET_POSITIONS = ("_metadata.file_path", "_metadata.row_index",
+                      "_metadata.file_modification_time")
+_SCAN_POSITIONS = (_FILE, _POS, FILE_MTIME)
 
 
-def _group_projection(
-    file_schema: TableSchema, current: TableSchema, has_lineage: bool
-) -> list[F.Column]:
-    """Select-list projecting a file group's physical layout to the current
-    schema, by column id (never by name — SURVEY.md §1.4)."""
+def projection_sql(
+    file_schema: TableSchema,
+    current: TableSchema,
+    has_lineage: bool,
+    *,
+    lineage: bool = False,
+    positions: tuple[str, str, str] | None = None,
+) -> list[str]:
+    """Select-list text projecting a file group's physical layout to the
+    current schema, by column id (never by name — SURVEY.md §1.4): renamed
+    columns read their physical name, retyped ones cast, added ones surface
+    their ``initial_default``, dropped ones are not selected.  ``lineage``
+    appends _row_id and _last_updated_sequence_number (NULL for files
+    written without them); ``positions`` names the sources of the
+    (__mor_file, __mor_pos, _file_modified_time) columns.  Applied with one
+    ``selectExpr`` per group."""
     by_id = {f.id: f for f in file_schema.fields}
-    cols = []
+    out = []
     for fld in current.fields:
         src = by_id.get(fld.id)
         if src is None:
-            cols.append(_default_lit(fld).alias(fld.name))
+            out.append(column_sql(fld.name, None, fld.type, fld.initial_default))
         else:
-            c = F.col(src.pname)
-            if src.type != fld.type:
-                c = c.cast(spark_type(fld.type))
-            cols.append(c.alias(fld.name))
+            out.append(column_sql(fld.name, src.pname,
+                                  fld.type if src.type != fld.type else None))
+    if lineage:
+        out += ([ROW_ID, LAST_SEQ] if has_lineage
+                else [f"CAST(NULL AS BIGINT) AS {c}" for c in (ROW_ID, LAST_SEQ)])
+    if positions is not None:
+        out += [f"{s} AS {d}" for s, d in zip(positions, _SCAN_POSITIONS)]
+    return out
+
+
+def _scan_group(
+    spark: SparkSession,
+    meta: TableMetadata,
+    key: tuple[int, bool, str],
+    files: list[DataFile],
+    *,
+    lineage: bool = False,
+    positions: bool = True,
+) -> DataFrame:
+    """One file group (schema_id, has_lineage, format) read with its own
+    physical schema and projected by ``projection_sql`` in one
+    ``selectExpr``.  Parquet positions come from ``_metadata``; ORC (when
+    positions are needed) and Avro (always: there is no native reader)
+    take the positional scans below."""
+    schema_id, has_lineage, fmt = key
+    fschema = meta.schema_by_id(schema_id)
+    struct = fschema.to_struct(physical=True)
     if has_lineage:
-        cols += [F.col(ROW_ID), F.col(LAST_SEQ)]
+        struct = T.StructType(
+            list(struct.fields)
+            + [T.StructField(ROW_ID, T.LongType()), T.StructField(LAST_SEQ, T.LongType())]
+        )
+    if fmt == "avro" or (fmt == "orc" and positions):
+        # Spark's ORC source has no _metadata.row_index, and this
+        # distribution has no avro datasource at all — the pyarrow stripe /
+        # pure-Python OCF readers supply exact file positions for the MoR
+        # anti-join and row-id synthesis
+        scan = _orc_scan_with_positions if fmt == "orc" else _avro_scan_with_positions
+        df, src = scan(spark, files, struct), _SCAN_POSITIONS
     else:
-        cols += [
-            F.lit(None).cast("long").alias(ROW_ID),
-            F.lit(None).cast("long").alias(LAST_SEQ),
-        ]
-    return cols
+        rd = spark.read.schema(struct)
+        paths = [f.path for f in files]
+        # NB: DataFrameReader.orc takes ONE path-or-list (its second
+        # positional is mergeSchema), unlike .parquet(*paths)
+        df, src = (rd.orc(paths) if fmt == "orc" else rd.parquet(*paths)), _PARQUET_POSITIONS
+    return df.selectExpr(*projection_sql(
+        fschema, meta.schema, has_lineage, lineage=lineage,
+        positions=src if positions else None))
+
+
+def _group_key(f: DataFile) -> tuple[int, bool, str]:
+    return f.schema_id, bool(f.has_lineage), f.file_format or "parquet"
+
+
+def _union(parts: list[DataFrame]) -> DataFrame:
+    out = parts[0]
+    for p in parts[1:]:
+        out = out.unionByName(p)
+    return out
+
+
+def _scan_with_positions(
+    spark: SparkSession, meta: TableMetadata, files: list[DataFile]
+) -> DataFrame:
+    """``files`` projected to the current schema, plus (__mor_file,
+    __mor_pos, _file_modified_time): one scan per file group, unioned."""
+    groups: dict[tuple[int, bool, str], list[DataFile]] = {}
+    for f in files:
+        groups.setdefault(_group_key(f), []).append(f)
+    return _union([_scan_group(spark, meta, k, fs) for k, fs in sorted(groups.items())])
 
 
 def _file_info_df(spark: SparkSession, files: list[DataFile]) -> DataFrame:
@@ -152,96 +223,53 @@ def snapshot_df(
     # (file, pos) anti-join
     deleted_refs: set[str] = set()
     for dfl in pos_dels:
-        deleted_refs.update(getattr(dfl, "referenced_files", []) or _read_refs(dfl.path))
+        deleted_refs.update(_delete_refs(dfl))
     # an equality delete applies to every data file STRICTLY older than it
     # (same-commit data files are exempt — that exemption is what makes the
     # streaming upsert a blind write)
     max_eq_seq = max((d.sequence_number for d in eq_dels), default=None)
 
-    need_lineage = hidden
-    groups: dict[tuple[int, bool, bool, bool, str], list[DataFile]] = {}
+    groups: dict[tuple[bool, bool, int, bool, str], list[DataFile]] = {}
     for f in data_files:
         is_eq = max_eq_seq is not None and f.sequence_number < max_eq_seq
-        key = (f.schema_id, bool(f.has_lineage), f.path in deleted_refs,
-               is_eq, f.file_format or "parquet")
-        groups.setdefault(key, []).append(f)
+        groups.setdefault((f.path in deleted_refs, is_eq, *_group_key(f)), []).append(f)
 
+    # delete-referenced groups are unioned under ONE position-delete
+    # anti-join; clean groups stay bare scans (full parquet pushdown) and
+    # carry no position columns unless the hidden columns need them
+    dirty: list[DataFrame] = []
     parts: list[DataFrame] = []
-    for (schema_id, has_lineage, is_deleted, is_eq,
-         fmt), files in sorted(groups.items()):
-        fschema = meta.schema_by_id(schema_id)
-        struct = fschema.to_struct(physical=True)
-        if has_lineage:
-            struct = T.StructType(
-                list(struct.fields)
-                + [T.StructField(ROW_ID, T.LongType()), T.StructField(LAST_SEQ, T.LongType())]
-            )
-        proj = _group_projection(fschema, current, has_lineage)
-        needs_meta = need_lineage or is_deleted or is_eq
-        if fmt == "avro" or (fmt == "orc" and needs_meta):
-            # positional non-parquet scan: Spark's ORC source has no
-            # _metadata.row_index, and this distribution has no avro
-            # datasource at all — the pyarrow stripe / pure-Python OCF
-            # readers supply exact file positions for the MoR anti-join
-            # and row-id synthesis (avro routes here even for plain
-            # scans: there is no native reader to fall back to)
-            scan = (_orc_scan_with_positions if fmt == "orc"
-                    else _avro_scan_with_positions)
-            df = scan(spark, files, struct)
-            if needs_meta:
-                df = df.select(*proj, F.col(_FILE), F.col(_POS),
-                               F.col(FILE_MTIME))
-        else:
-            rd = spark.read.schema(struct)
-            paths_ = [f.path for f in files]
-            # NB: DataFrameReader.orc takes ONE path-or-list (its second
-            # positional is mergeSchema), unlike .parquet(*paths)
-            df = rd.orc(paths_) if fmt == "orc" else rd.parquet(*paths_)
-        if needs_meta and fmt == "parquet":
-            df = df.select(
-                *proj,
-                F.col("_metadata.file_path").alias(_FILE),
-                F.col("_metadata.row_index").alias(_POS),
-                F.col("_metadata.file_modification_time").alias(FILE_MTIME),
-            )
-        elif not needs_meta:
-            df = df.select(*proj)
-            df = df.withColumn(_FILE, F.lit(None).cast("string")) \
-                   .withColumn(_POS, F.lit(None).cast("long")) \
-                   .withColumn(FILE_MTIME, F.lit(None).cast("timestamp"))
-        if is_deleted:
-            dels = read_position_deletes(spark, manifest, only_for=[f.path for f in files])
-            n_del = sum(d.record_count for d in pos_dels)
-            df = df.join(
-                _hint_deletes(dels, n_del),
-                (df[_FILE] == dels["__del_file"]) & (df[_POS] == dels["__del_pos"]),
-                "left_anti",
-            )
+    for (is_deleted, is_eq, *key), files in sorted(groups.items()):
+        df = _scan_group(spark, meta, tuple(key), files, lineage=hidden,
+                         positions=hidden or is_deleted or is_eq)
         if is_eq:
             df = _apply_equality_deletes(spark, meta, df, files, eq_dels)
-        parts.append(df)
-
-    df = parts[0]
-    for p in parts[1:]:
-        df = df.unionByName(p)
+        (dirty if is_deleted else parts).append(df)
+    if dirty:
+        df = _union(dirty)
+        dels = read_position_deletes(
+            spark, manifest,
+            only_for=[f.path for (d, *_), fs in groups.items() if d for f in fs])
+        n_del = sum(d.record_count for d in pos_dels)
+        df = df.join(
+            _hint_deletes(dels, n_del),
+            (df[_FILE] == dels["__del_file"]) & (df[_POS] == dels["__del_pos"]),
+            "left_anti",
+        )
+        parts.insert(0, df)
 
     if not hidden:
-        return df.select(*[f.name for f in current.fields])
+        return _union([p.drop(*_SCAN_POSITIONS) for p in parts])
 
+    df = _union(parts)
     info = _file_info_df(spark, data_files)
     df = df.join(F.broadcast(info), df[_FILE] == info["__fi_path"], "left")
-    df = (
-        df.withColumn(ROW_ID, F.coalesce(F.col(ROW_ID), F.col("__fi_first_row_id") + F.col(_POS)))
-        .withColumn(LAST_SEQ, F.coalesce(F.col(LAST_SEQ), F.col("__fi_seq")))
-        .withColumn(PARTITION_COL, F.col("__fi_partition"))
-        .withColumn(PATH_COL, F.col(_FILE))
-    )
-    return df.select(
-        *[f.name for f in current.fields],
-        ROW_ID,
-        LAST_SEQ,
-        PARTITION_COL,
-        PATH_COL,
+    return df.selectExpr(
+        *[sql_ident(f.name) for f in current.fields],
+        f"coalesce({ROW_ID}, __fi_first_row_id + {_POS}) AS {ROW_ID}",
+        f"coalesce({LAST_SEQ}, __fi_seq) AS {LAST_SEQ}",
+        f"__fi_partition AS {PARTITION_COL}",
+        f"{_FILE} AS {PATH_COL}",
         FILE_MTIME,
     )
 
@@ -373,53 +401,20 @@ def rows_at_positions(
     """Rows of ``files`` whose (path, position) appear in ``delete_df``
     (__del_file, __del_pos) — used by CDC to materialize deleted rows.
     ``n_delete_rows`` (manifest record counts) gates the broadcast hint."""
-    current = meta.schema
-    groups: dict[tuple[int, bool, str], list[DataFile]] = {}
-    for f in files:
-        groups.setdefault(
-            (f.schema_id, bool(f.has_lineage),
-             f.file_format or "parquet"), []).append(f)
-    parts = []
-    for (schema_id, has_lineage, fmt), fs in sorted(groups.items()):
-        fschema = meta.schema_by_id(schema_id)
-        struct = fschema.to_struct(physical=True)
-        if has_lineage:
-            struct = T.StructType(
-                list(struct.fields)
-                + [T.StructField(ROW_ID, T.LongType()), T.StructField(LAST_SEQ, T.LongType())]
-            )
-        proj = _group_projection(fschema, current, has_lineage)
-        if fmt in ("orc", "avro"):
-            scan = (_orc_scan_with_positions if fmt == "orc"
-                    else _avro_scan_with_positions)
-            df = scan(spark, fs, struct)
-            df = df.select(*proj, F.col(_FILE), F.col(_POS))
-        else:
-            df = spark.read.schema(struct).parquet(*[f.path for f in fs])
-            df = df.select(
-                *proj,
-                F.col("_metadata.file_path").alias(_FILE),
-                F.col("_metadata.row_index").alias(_POS),
-            )
-        hinted = (
-            delete_df
-            if n_delete_rows is not None and n_delete_rows > _DELETE_BROADCAST_ROWS
-            else F.broadcast(delete_df)
-        )
-        df = df.join(
-            hinted,
-            (df[_FILE] == delete_df["__del_file"]) & (df[_POS] == delete_df["__del_pos"]),
-            "left_semi",
-        )
-        parts.append(df)
-    if not parts:
-        return spark.createDataFrame([], meta.schema.to_struct()).select(
-            *[f.name for f in current.fields]
-        )
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out.select(*[f.name for f in current.fields])
+    if not files:
+        return spark.createDataFrame([], meta.schema.to_struct())
+    df = _scan_with_positions(spark, meta, files)
+    hinted = (
+        delete_df
+        if n_delete_rows is not None and n_delete_rows > _DELETE_BROADCAST_ROWS
+        else F.broadcast(delete_df)
+    )
+    df = df.join(
+        hinted,
+        (df[_FILE] == delete_df["__del_file"]) & (df[_POS] == delete_df["__del_pos"]),
+        "left_semi",
+    )
+    return df.drop(*_SCAN_POSITIONS)
 
 
 def _read_refs(delete_path: str) -> set[str]:
@@ -428,6 +423,12 @@ def _read_refs(delete_path: str) -> set[str]:
 
     t = pq.read_table(delete_path, columns=["file_path"])
     return set(t.column("file_path").to_pylist())
+
+
+def _delete_refs(d) -> set[str]:
+    """Data files a position-delete / DV entry references, from the
+    manifest when it records them."""
+    return set(d.referenced_files) or _read_refs(d.path)
 
 
 #: broadcast ceiling for the position-delete set — (file,pos) pairs are
@@ -562,36 +563,7 @@ def equality_positions(
     second tombstone)."""
     from functools import reduce
 
-    current = meta.schema
-    groups: dict[tuple[int, bool, str], list] = {}
-    for f in files:
-        groups.setdefault(
-            (f.schema_id, bool(f.has_lineage),
-             f.file_format or "parquet"), []).append(f)
-    base: DataFrame | None = None
-    for (schema_id, has_lineage, fmt), fs in sorted(groups.items()):
-        fschema = meta.schema_by_id(schema_id)
-        struct = fschema.to_struct(physical=True)
-        if has_lineage:
-            struct = T.StructType(
-                list(struct.fields)
-                + [T.StructField(ROW_ID, T.LongType()), T.StructField(LAST_SEQ, T.LongType())]
-            )
-        proj = _group_projection(fschema, current, has_lineage)
-        if fmt in ("orc", "avro"):
-            scan = (_orc_scan_with_positions if fmt == "orc"
-                    else _avro_scan_with_positions)
-            df = scan(spark, fs, struct)
-            df = df.select(*proj, F.col(_FILE), F.col(_POS))
-        else:
-            df = spark.read.schema(struct).parquet(*[f.path for f in fs])
-            df = df.select(
-                *proj,
-                F.col("_metadata.file_path").alias(_FILE),
-                F.col("_metadata.row_index").alias(_POS),
-            )
-        base = df if base is None else base.unionByName(df)
-    assert base is not None
+    base = _scan_with_positions(spark, meta, files)
     pos = read_position_deletes(spark, manifest, only_for=[f.path for f in files])
     n_pos = sum(
         d.record_count for d in manifest.delete_files
@@ -624,9 +596,7 @@ def equality_positions(
         hit = base.join(_hint_deletes(eqdf, n_del), cond, "left_semi")
         out = hit if out is None else out.unionByName(hit)
     assert out is not None
-    return out.select(
-        F.col(_FILE).alias("file_path"), F.col(_POS).alias("pos")
-    ).distinct()
+    return out.selectExpr(f"{_FILE} AS file_path", f"{_POS} AS pos").distinct()
 
 
 def read_position_deletes(
@@ -634,24 +604,21 @@ def read_position_deletes(
 ) -> DataFrame:
     """Union of live position tombstones as (__del_file, __del_pos) —
     raw position-delete parquet files plus consolidated deletion-vector
-    packs (sources/deletion_vectors.py)."""
-    paths = [d.path for d in manifest.delete_files if d.content == "position"]
-    dvs = [d for d in manifest.delete_files if d.content == "dv"]
-    schema = T.StructType(
-        [T.StructField("file_path", T.StringType()), T.StructField("pos", T.LongType())]
-    )
+    packs (sources/deletion_vectors.py).  ``only_for`` (plain data paths)
+    reads only the delete files whose referenced files meet it, chosen from
+    the manifest; rows naming other data files may remain, which an
+    anti- or semi-join on (file, pos) over ``only_for`` never matches."""
+    dels = [d for d in manifest.delete_files if d.content in ("position", "dv")]
+    if only_for is not None:
+        want = set(only_for) | {_to_uri(p) for p in only_for}
+        dels = [d for d in dels if not want.isdisjoint(_delete_refs(d))]
+    paths = [d.path for d in dels if d.content == "position"]
+    dvs = [d for d in dels if d.content == "dv"]
     parts: list[DataFrame] = []
     if paths:
-        df = spark.read.schema(schema).parquet(*paths)
-        if only_for is not None:
-            uris = [_to_uri(p) for p in only_for]
-            df = df.where(F.col("file_path").isin(uris))
         parts.append(
-            df.select(
-                F.col("file_path").alias("__del_file"),
-                F.col("pos").alias("__del_pos"),
-            )
-        )
+            spark.read.schema("file_path string, pos long").parquet(*paths)
+            .withColumnsRenamed({"file_path": "__del_file", "pos": "__del_pos"}))
     if dvs:
         from iceberg_trino_sql_demo_spark.sources.deletion_vectors import (
             read_dv_positions,
@@ -659,10 +626,5 @@ def read_position_deletes(
 
         parts.append(read_dv_positions(spark, dvs, only_for))
     if not parts:
-        return spark.createDataFrame([], schema).select(
-            F.col("file_path").alias("__del_file"), F.col("pos").alias("__del_pos")
-        )
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out
+        return spark.createDataFrame([], "__del_file string, __del_pos long")
+    return _union(parts)

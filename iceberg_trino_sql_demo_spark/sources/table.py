@@ -60,6 +60,7 @@ from iceberg_trino_sql_demo_spark.sources.metadata import (
     SpecField,
     TableMetadata,
     TableSchema,
+    column_sql,
     now_ms,
     spark_type,
 )
@@ -891,11 +892,8 @@ class Table:
         """Append a DataFrame as new data files (engine-internal
         INSERT ... SELECT; used by the incremental MV refresh path).
         Columns are aligned to the current schema by name with casts."""
-        aligned = df.select(
-            *[
-                F.col(f.name).cast(spark_type(f.type)).alias(f.name)
-                for f in self.meta.schema.fields
-            ]
+        aligned = df.selectExpr(
+            *[column_sql(f.name, f.name, f.type) for f in self.meta.schema.fields]
         )
         return self._append_files(aligned, "append", ref)
 
@@ -1270,8 +1268,10 @@ class Table:
             "rewritten-position-delete-files": len(pos),
             "data-invariant": "true",
         }
-        sub = Manifest([], pos)
-        matches = read_position_deletes(self.spark, sub, only_for=covered)
+        # the chosen delete files may also name dead data files: keep only
+        # tombstones of live ones
+        matches = read_position_deletes(self.spark, Manifest([], pos), only_for=covered)
+        matches = matches.where(F.col("__del_file").isin([_to_uri(p) for p in covered]))
         packed = write_dv_pack(self.location, matches) if covered else None
         new_dels = list(others)
         if packed is not None:
@@ -1314,67 +1314,24 @@ class Table:
     ) -> DataFrame:
         """(file_path URI, pos) of rows matching cond within ``files``,
         honouring already-applied MoR deletes."""
-        from iceberg_trino_sql_demo_spark.sources.reader import _FILE, _POS  # internal
+        from iceberg_trino_sql_demo_spark.sources.reader import (  # internal
+            _FILE,
+            _POS,
+            _hint_deletes,
+            _scan_with_positions,
+        )
 
-        sub = Manifest(files, manifest.delete_files)
-        current = self.meta.schema
-        groups: dict[tuple[int, bool, str], list[DataFile]] = {}
-        for f in files:
-            groups.setdefault(
-                (f.schema_id, bool(f.has_lineage),
-                 f.file_format or "parquet"), []).append(f)
-        parts = []
-        for (schema_id, has_lineage, fmt), fs in sorted(groups.items()):
-            fschema = self.meta.schema_by_id(schema_id)
-            struct = fschema.to_struct(physical=True)
-            if has_lineage:
-                struct = T.StructType(
-                    list(struct.fields)
-                    + [T.StructField(ROW_ID, T.LongType()), T.StructField(LAST_SEQ, T.LongType())]
-                )
-            from iceberg_trino_sql_demo_spark.sources.reader import (
-                _avro_scan_with_positions,
-                _group_projection,
-                _orc_scan_with_positions,
-            )
-
-            proj = _group_projection(fschema, current, has_lineage)
-            if fmt in ("orc", "avro"):
-                # engine MoR DML over a freshly-adopted ORC/Avro table
-                # (before compaction returns it to parquet): positions
-                # come from the same per-file positional scans the read
-                # path uses (r13 — previously this read .parquet
-                # unconditionally and DML failed loudly pre-optimize)
-                scan = (_orc_scan_with_positions if fmt == "orc"
-                        else _avro_scan_with_positions)
-                raw = scan(self.spark, fs, struct).select(
-                    *proj,
-                    F.col(_FILE).alias("file_path"),
-                    F.col(_POS).alias("pos"),
-                )
-            else:
-                raw = self.spark.read.schema(struct).parquet(
-                    *[f.path for f in fs]).select(
-                    *proj,
-                    F.col("_metadata.file_path").alias("file_path"),
-                    F.col("_metadata.row_index").alias("pos"),
-                )
-            parts.append(raw)
-        df = parts[0]
-        for p in parts[1:]:
-            df = df.unionByName(p)
+        df = _scan_with_positions(self.spark, self.meta, files)
         # exclude rows already deleted by live position deletes (broadcast
         # only while the manifest proves the delete set small)
-        from iceberg_trino_sql_demo_spark.sources.reader import _hint_deletes
-
-        dels = read_position_deletes(self.spark, sub)
-        n_del = sum(d.record_count for d in sub.delete_files)
+        dels = read_position_deletes(self.spark, manifest, only_for=[f.path for f in files])
+        n_del = sum(d.record_count for d in manifest.delete_files)
         df = df.join(
             _hint_deletes(dels, n_del),
-            (df["file_path"] == dels["__del_file"]) & (df["pos"] == dels["__del_pos"]),
+            (df[_FILE] == dels["__del_file"]) & (df[_POS] == dels["__del_pos"]),
             "left_anti",
         )
-        return df.where(cond).select("file_path", "pos")
+        return df.where(cond).selectExpr(f"{_FILE} AS file_path", f"{_POS} AS pos")
 
     def _write_position_deletes(
         self,
@@ -1608,7 +1565,7 @@ class Table:
         """
         manifest = self._manifest(self._resolve(ref))
         src_cols = {c: f"__src_{c}" for c in source.columns}
-        src = source.select(*[F.col(c).alias(a) for c, a in src_cols.items()])
+        src = source.selectExpr(*[column_sql(a, c) for c, a in src_cols.items()])
 
         # Plan affected files DISTRIBUTEDLY: semi-join the target's hidden
         # _path column against the source keys.  Only file paths (manifest
@@ -1690,9 +1647,10 @@ class Table:
             unmatched = src.join(
                 tgt_keys, src[src_cols[on]] == tgt_keys[on], "left_anti"
             )
-            ins = unmatched.select(
+            ins = unmatched.selectExpr(
                 *[
-                    (F.col(src_cols[n]) if n in src_cols else F.lit(None).cast(spark_type(self.meta.schema.field_by_name(n).type))).alias(n)
+                    column_sql(n, src_cols[n]) if n in src_cols
+                    else column_sql(n, None, self.meta.schema.field_by_name(n).type)
                     for n in tgt_names
                 ]
             )
@@ -1793,7 +1751,7 @@ class Table:
         COLUMN; beyond the reference script, which evolves by add/drop
         only — :164-187).  The field keeps its column id, so files written
         under the old name keep resolving through the by-id projection
-        (reader._group_projection reads each file with ITS OWN schema
+        (reader.projection_sql reads each file with ITS OWN schema
         version's physical names) and no data file is rewritten; files
         written after the rename store the new name under the same id.
         Partition specs reference columns by source_id, so transforms on

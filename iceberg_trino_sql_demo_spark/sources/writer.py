@@ -27,7 +27,9 @@ from iceberg_trino_sql_demo_spark.sources.metadata import (
     DataFile,
     PartitionSpec,
     TableSchema,
+    column_sql,
     now_ms,
+    sql_ident,
 )
 from iceberg_trino_sql_demo_spark.sources.transforms import Transform, parse_transform
 
@@ -112,9 +114,9 @@ def write_data_files(
     extra = extra_physical_cols or []
 
     # logical -> physical names, preserving schema order
-    out = df.select(
-        *[F.col(f.name).alias(f.pname) for f in schema.fields],
-        *[F.col(c) for c in extra],
+    out = df.selectExpr(
+        *[column_sql(f.pname, f.name) for f in schema.fields],
+        *[sql_ident(c) for c in extra],
     )
     by_name = {f.name: f for f in schema.fields}
     for pt_name, t in pts:
