@@ -148,15 +148,33 @@ def _union(parts: list[DataFrame]) -> DataFrame:
     return out
 
 
+#: _row_id / _last_updated_sequence_number of a scan joined to
+#: ``_file_info_df``: the physical values, else derived from the manifest
+#: (first_row_id + position, the file's sequence number)
+_LINEAGE_SQL = (f"coalesce({ROW_ID}, __fi_first_row_id + {_POS}) AS {ROW_ID}",
+                f"coalesce({LAST_SEQ}, __fi_seq) AS {LAST_SEQ}")
+
+
 def _scan_with_positions(
-    spark: SparkSession, meta: TableMetadata, files: list[DataFile]
+    spark: SparkSession, meta: TableMetadata, files: list[DataFile],
+    *, lineage: bool = False,
 ) -> DataFrame:
     """``files`` projected to the current schema, plus (__mor_file,
-    __mor_pos, _file_modified_time): one scan per file group, unioned."""
+    __mor_pos, _file_modified_time): one scan per file group, unioned.
+    ``lineage`` adds _row_id and _last_updated_sequence_number valued as
+    ``snapshot_df(hidden=True)`` values them, through the same broadcast
+    join to the manifest's file info."""
     groups: dict[tuple[int, bool, str], list[DataFile]] = {}
     for f in files:
         groups.setdefault(_group_key(f), []).append(f)
-    return _union([_scan_group(spark, meta, k, fs) for k, fs in sorted(groups.items())])
+    df = _union([_scan_group(spark, meta, k, fs, lineage=lineage)
+                 for k, fs in sorted(groups.items())])
+    if not lineage:
+        return df
+    info = _file_info_df(spark, files)
+    df = df.join(F.broadcast(info), df[_FILE] == info["__fi_path"], "left")
+    return df.selectExpr(*[sql_ident(f.name) for f in meta.schema.fields],
+                         *_LINEAGE_SQL, *_SCAN_POSITIONS)
 
 
 def _file_info_df(spark: SparkSession, files: list[DataFile]) -> DataFrame:
@@ -266,8 +284,7 @@ def snapshot_df(
     df = df.join(F.broadcast(info), df[_FILE] == info["__fi_path"], "left")
     return df.selectExpr(
         *[sql_ident(f.name) for f in current.fields],
-        f"coalesce({ROW_ID}, __fi_first_row_id + {_POS}) AS {ROW_ID}",
-        f"coalesce({LAST_SEQ}, __fi_seq) AS {LAST_SEQ}",
+        *_LINEAGE_SQL,
         f"__fi_partition AS {PARTITION_COL}",
         f"{_FILE} AS {PATH_COL}",
         FILE_MTIME,

@@ -1306,14 +1306,16 @@ class Table:
             keep_df = self._read_files_with_lineage(manifest, affected).where(~cond)
             return self._rewrite_files(manifest, affected, keep_df, "delete", ref)
         # MoR: write the matching (file, position) pairs as a deletion vector
-        matches = self._positions_for(cond, affected, manifest)
+        matches = self._positions_for(cond, where, affected, manifest)
         return self._write_position_deletes(manifest, affected, matches, "delete", ref)
 
     def _positions_for(
-        self, cond: Column, files: list[DataFile], manifest: LazyManifest
+        self, cond: Column, where: str, files: list[DataFile], manifest: LazyManifest
     ) -> DataFrame:
-        """(file_path URI, pos) of rows matching cond within ``files``,
-        honouring already-applied MoR deletes."""
+        """(file_path URI, pos) of rows matching cond (the SQL text
+        ``where``) within ``files``, honouring already-applied MoR deletes.
+        A ``where`` that names a row-lineage column sees it valued as the
+        ``_affected_files`` probe and ``_read_files_with_lineage`` see it."""
         from iceberg_trino_sql_demo_spark.sources.reader import (  # internal
             _FILE,
             _POS,
@@ -1321,7 +1323,9 @@ class Table:
             _scan_with_positions,
         )
 
-        df = _scan_with_positions(self.spark, self.meta, files)
+        names = where.lower()
+        df = _scan_with_positions(self.spark, self.meta, files,
+                                  lineage=ROW_ID in names or LAST_SEQ in names)
         # exclude rows already deleted by live position deletes (broadcast
         # only while the manifest proves the delete set small)
         dels = read_position_deletes(self.spark, manifest, only_for=[f.path for f in files])
@@ -1499,7 +1503,7 @@ class Table:
             src = self._read_files_with_lineage(manifest, affected)
             return self._rewrite_files(manifest, affected, apply_assign(src, False), "overwrite", ref)
         # MoR: delete old versions by position, append updated versions
-        matches = self._positions_for(cond, affected, manifest)
+        matches = self._positions_for(cond, where, affected, manifest)
         updated = self._read_files_with_lineage(manifest, affected).where(cond)
         updated = apply_assign(updated, True)
         return self._write_position_deletes(

@@ -8,16 +8,16 @@ Every round trip is charged to the operation that made it and to the
 innermost engine source line (``iceberg_trino_sql_demo_spark/...:N``) on
 the Python stack at the time; a call made outside the engine (workload
 code, PySpark internals reached from it) is charged to ``<outside>``.
-Prints the total, the per-operation counts and the ``--top`` busiest
-engine lines.  The session is built like ``perfbench/run.py`` builds it
-(cores from the affinity mask, AQE off, UTC) over the benchmark corpus
-in ``perfbench/data/sf0.1``; the workload comes from
-``perfbench.workloads`` unchanged.
+Prints the total, the per-operation counts and the ``TOP`` busiest
+engine lines.  The environment and the pass loop are those of
+``perfbench/run.py`` (its ``_profile`` and ``Runner``, imported
+unchanged) over the benchmark corpus in ``perfbench/data/sf0.1``.
 """
 
 from __future__ import annotations
 
 import argparse
+import contextlib
 import os
 import random
 import shutil
@@ -27,35 +27,32 @@ from collections import Counter
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, ROOT)
 
+from perfbench import run as bench  # noqa: E402
+
 PKG_DIR = os.path.join(ROOT, "iceberg_trino_sql_demo_spark") + os.sep
-CORPUS = os.path.join(ROOT, "perfbench", "data", "sf0.1")
-
-
-def _env(work: str) -> None:
-    cpus = str(len(os.sched_getaffinity(0)))
-    tmp = os.path.join(work, "tmp")
-    os.makedirs(tmp, exist_ok=True)
-    os.environ.update({
-        "SPARK_GRAFT_CPUS": cpus,
-        "SPARK_GRAFT_SHUFFLE_PARTITIONS": cpus,
-        "SPARK_GRAFT_ADAPTIVE": "false",
-        "SPARK_LOCAL_DIRS": os.path.join(work, "spark-local"),
-        "TMPDIR": tmp,
-        "TZ": "UTC",
-        "PYSPARK_SUBMIT_ARGS": f"--conf spark.driver.extraJavaOptions=-Djava.io.tmpdir={tmp} "
-                               f"--conf spark.sql.warehouse.dir={os.path.join(work, 'spark-warehouse')} "
-                               "pyspark-shell",
-    })
+#: engine source lines to list
+TOP = 25
 
 
 class Census:
-    """Wraps ``send_command``; counts per operation and per engine line."""
+    """Wraps ``send_command``; counts per operation and per engine line.
+    Set as the run context's ``tracer``, so ``Runner.run_pass`` names the
+    operation in flight."""
 
     def __init__(self):
         self.op = "<none>"
         self.by_op: Counter = Counter()
         self.by_line: Counter = Counter()
         self._orig = None
+
+    def begin_op(self, name: str) -> None:
+        self.op = name
+
+    def end_op(self, dt: float, t0: float) -> None:
+        self.op = "<between operations>"
+
+    def span(self, name: str):
+        return contextlib.nullcontext()
 
     def _site(self) -> str:
         f = sys._getframe(2)
@@ -85,63 +82,52 @@ class Census:
         ClientServerConnection.send_command = self._orig
 
 
-def run_pass(workload, ctx, rng: random.Random, census: Census | None) -> None:
-    for op in workload.begin_pass(ctx, rng, False):
-        if op.prelude is not None:
-            op.prelude()
-        if census is not None:
-            census.op = op.name
-        op.run()
-        if census is not None:
-            census.op = "<between operations>"
-        if op.after is not None:
-            op.after()
-    workload.end_pass(ctx)
-
-
 def main() -> int:
     ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
     ap.add_argument("--workload", required=True, choices=("tpch_adhoc", "lakehouse_mixed"))
     ap.add_argument("--seed", type=int, required=True)
-    ap.add_argument("--top", type=int, default=25, help="engine lines to list")
     args = ap.parse_args()
 
     work = os.path.join(ROOT, ".perfbench_work", f"census-{os.getpid()}")
-    _env(work)
+    bench._profile(work)
     from perfbench import workloads
 
     from iceberg_trino_sql_demo_spark import operators
     from iceberg_trino_sql_demo_spark.session import get_spark
 
     operators.load_all()
-    ctx = workloads.Ctx(data_dir=CORPUS, work_dir=os.path.join(work, "run"))
+    ctx = workloads.Ctx(data_dir=bench.CORPUS, work_dir=os.path.join(work, "run"))
     workload = workloads.WORKLOADS[args.workload]()
+    runner = bench.Runner(workload, ctx)
     census = Census()
     spark = ctx.spark = get_spark("py4j_census")
     try:
         workload.prepare(ctx)
         rng = random.Random(args.seed)
         for _ in range(2):
-            run_pass(workload, ctx, rng, None)
+            runner.run_pass(rng, timed=False)
+        ctx.tracer = census
         census.install()
         try:
-            run_pass(workload, ctx, rng, census)
+            runner.run_pass(rng, timed=False)
         finally:
             census.uninstall()
+            ctx.tracer = None
     finally:
-        operators.release_caches()
-        spark.stop()
+        bench._stop(spark)
         shutil.rmtree(work, ignore_errors=True)
 
     total = sum(census.by_op.values())
     print(f"# py4j round trips, {args.workload} seed {args.seed}, one warm pass: {total}")
+    for f in runner.failures:
+        print(f"# failed op: {f['op']} ({f['how']}) {f['detail'][:200]}")
     print("# per operation")
     for op, n in census.by_op.items():
         print(f"  {op:<32}{n:>8}")
-    print(f"# top {args.top} engine source lines")
-    for site, n in census.by_line.most_common(args.top):
+    print(f"# top {TOP} engine source lines")
+    for site, n in census.by_line.most_common(TOP):
         print(f"  {site:<64}{n:>8}")
-    return 0
+    return 1 if runner.failures else 0
 
 
 if __name__ == "__main__":

@@ -3,6 +3,8 @@ of py4j round trips, and the position-delete set is read once per scan."""
 
 from __future__ import annotations
 
+import gc
+
 import pytest
 from py4j.clientserver import ClientServerConnection
 from pyspark.sql import functions as F
@@ -56,6 +58,7 @@ def _round_trips(fn) -> int:
         n += 1
         return orig(conn, command)
 
+    gc.collect()  # JavaObjects freed by earlier tests send no MEMORY_DEL here
     ClientServerConnection.send_command = counted
     try:
         fn()
@@ -73,8 +76,10 @@ def test_scan_plan_round_trips_bounded(tables):
         t.df()  # first build parses and caches the column types
         counts[w] = _round_trips(t.df)
     # the projection is one selectExpr per group: widening adds the
-    # list-element conversion only, not F.col + alias per column
-    assert counts[40] - counts[4] <= (40 - 4) * len(groups), counts
+    # list-element conversion only (one round trip per column per group,
+    # 72 here), not F.col + alias per column (about 20 per column); the
+    # factor 2 leaves room for a stray py4j command in the counted window
+    assert counts[40] - counts[4] <= 2 * (40 - 4) * len(groups), counts
     assert counts[40] <= MAX_ROUND_TRIPS, counts
 
 
@@ -90,3 +95,35 @@ def test_one_tombstone_read_per_scan(tables):
     # broadcast of ONE scan of the position-delete files
     plan = qe.executedPlan().toString().split("== Initial Plan ==")[0]
     assert plan.count("ReadSchema: struct<file_path:string,pos:bigint>") == 1, plan
+
+
+@pytest.mark.parametrize("where, assignments", [
+    ("_last_updated_sequence_number = {seq}", None),
+    ("_last_updated_sequence_number = {seq} - 1", None),
+    ("_row_id < 5", None),
+    ("_last_updated_sequence_number = {seq} - 1", {"v": 5}),
+])
+def test_dml_where_names_lineage_column(spark, tmp_path, where, assignments):
+    """A merge-on-read DELETE/UPDATE whose WHERE names a row-lineage column
+    matches the rows a copy-on-write table matches, in files written with
+    and without physical lineage columns alike."""
+    cat = Catalog(spark, str(tmp_path))
+    cat.create_schema("d")
+    cat.use("d")
+    rows = {}
+    for mode in ("merge-on-read", "copy-on-write"):
+        name = mode.replace("-", "_")
+        df = spark.range(100).select(F.col("id").alias("k"), (F.col("id") * 2).alias("v"))
+        cat.ctas(name, df.repartition(2), properties={"merge_mode": mode})
+        t = cat.table(name)
+        t.update({"v": 0}, "k % 10 = 0")
+        t = cat.table(name)
+        before = sorted(tuple(r) for r in t.df().collect())
+        w = where.format(seq=t.meta.last_sequence_number)
+        if assignments is None:
+            t.delete(w)
+        else:
+            t.update(assignments, w)
+        rows[mode] = sorted(tuple(r) for r in cat.table(name).df().collect())
+        assert rows[mode] != before, mode
+    assert rows["merge-on-read"] == rows["copy-on-write"]
