@@ -480,6 +480,24 @@ class LazyManifest:
         out.update(f.path for f in self.added)
         return out
 
+    def live_among(self, paths: Iterable[str]) -> set[str]:
+        """The members of ``paths`` that are live in this state.  Opens
+        only the segments whose path prefixes can hold one of them."""
+        want = set(paths) - set(self.removed)
+        out = {f.path for f in self.added if f.path in want}
+        rest = want - out
+        dirs = {os.path.dirname(p) for p in rest}
+        for seg in self.segments:
+            if not rest:
+                break
+            if dirs.isdisjoint(seg.prefixes):
+                continue
+            col = read_segment(self.location, seg).column("path")
+            hit = set(pc.filter(col, pc.is_in(col, value_set=pa.array(list(rest)))).to_pylist())
+            out |= hit
+            rest -= hit
+        return out
+
     # -- materialization -----------------------------------------------------
     @property
     def data_files(self) -> list[DataFile]:

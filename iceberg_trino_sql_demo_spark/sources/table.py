@@ -63,6 +63,7 @@ from iceberg_trino_sql_demo_spark.sources.metadata import (
     column_sql,
     now_ms,
     spark_type,
+    sql_ident,
 )
 from iceberg_trino_sql_demo_spark.sources.reader import (
     LAST_SEQ,
@@ -131,6 +132,28 @@ def _spec_from_partitioning(
         src = schema.field_by_name(t.source)
         fields.append(SpecField(field_id=first_field_id + i, source_id=src.id, transform=s))
     return PartitionSpec(spec_id=spec_id, fields=tuple(fields))
+
+
+def _surviving_deletes(
+    manifest: LazyManifest, removed_paths: set[str]
+) -> list[DeleteFile]:
+    """The delete files still needed once ``removed_paths`` leave
+    ``manifest``.  Equality deletes always stay: they apply table-wide to
+    every older file.  A position or DV delete stays while one of the data
+    files it references is live afterwards, or when it records none.  One
+    whose every target is gone, removed by this commit or an earlier one,
+    is inert and dropped."""
+    refs = {
+        p for d in manifest.delete_files
+        if d.content != "equality" for p in d.referenced_files
+    }
+    live = manifest.live_among(refs - removed_paths)
+    return [
+        d for d in manifest.delete_files
+        if d.content == "equality"
+        or not d.referenced_files
+        or not live.isdisjoint(d.referenced_files)
+    ]
 
 
 class Table:
@@ -352,7 +375,7 @@ class Table:
         if preds:
             out = self._stats_broadcast_hint(out, manifest, preds)
         if columns:
-            out = out.select(*columns)
+            out = out.selectExpr(*map(sql_ident, columns))
         return out
 
     def _segment_scan_safe(self, manifest) -> bool:
@@ -1010,17 +1033,10 @@ class Table:
                 f for f in base.data_files
                 if tuple(sorted(f.partition.items())) in touched
             ]
-        removed_paths = {f.path for f in removed}
-        # drop delete files that only referenced replaced data files; ones
-        # also referencing surviving files stay (their entries for removed
-        # files are inert — those files are no longer scanned)
-        kept_deletes = [
-            d for d in base.delete_files
-            if not (
-                d.referenced_files
-                and set(d.referenced_files) <= removed_paths
-            )
-        ]
+        # delete files whose referenced data files are all gone are dropped;
+        # ones also referencing surviving files stay (their entries for
+        # removed files are inert — those files are no longer scanned)
+        kept_deletes = _surviving_deletes(base, {f.path for f in removed})
         summary = {
             "added-data-files": len(new_files),
             "added-records": sum(f.record_count for f in new_files),
@@ -1259,9 +1275,8 @@ class Table:
         others = [d for d in manifest.delete_files if d not in pos]
         # scope to LIVE data files: tombstones referencing rewritten /
         # removed files are inert and must not survive consolidation
-        live = manifest.data_paths()
         covered = sorted(
-            live & {p for d in pos for p in d.referenced_files}
+            manifest.live_among({p for d in pos for p in d.referenced_files})
         )
         seq = max(d.sequence_number for d in pos)
         summary = {
@@ -1437,18 +1452,12 @@ class Table:
         )
         new_files = [DataFile(**{**f.to_dict(), "has_lineage": True}) for f in new_files]
         self._enrich_blooms(new_files)
-        replaced_paths = {f.path for f in replaced}
-        # position-delete files only referencing replaced data are now
-        # applied/garbage; EQUALITY deletes always survive a rewrite — they
-        # apply table-wide to older files, and the rewritten rows were read
-        # through the delete-applying path (so the new, newer-sequence
-        # files are correctly exempt while other files still need them)
-        kept_dels = [
-            d
-            for d in manifest.delete_files
-            if d.content == "equality"
-            or any(p not in replaced_paths for p in d.referenced_files)
-        ]
+        # position deletes left referencing no live data are now applied /
+        # garbage; EQUALITY deletes always survive a rewrite — the rewritten
+        # rows were read through the delete-applying path (so the new,
+        # newer-sequence files are correctly exempt while other files still
+        # need them)
+        kept_dels = _surviving_deletes(manifest, {f.path for f in replaced})
         # only segments holding replaced entries get rewritten
         out = manifest.with_delta(
             added=new_files, removed=replaced, delete_files=kept_dels

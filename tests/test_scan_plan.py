@@ -3,7 +3,7 @@ of py4j round trips, and the position-delete set is read once per scan."""
 
 from __future__ import annotations
 
-import gc
+import threading
 
 import pytest
 from py4j.clientserver import ClientServerConnection
@@ -50,15 +50,19 @@ def _groups(t) -> set:
 
 
 def _round_trips(fn) -> int:
+    """Commands ``fn`` sends from this thread.  py4j's finalizer thread
+    sends the MEMORY_DEL of JavaObjects freed earlier whenever it next
+    wakes, so its commands are not counted."""
     orig = ClientServerConnection.send_command
+    caller = threading.get_ident()
     n = 0
 
     def counted(conn, command):
         nonlocal n
-        n += 1
+        if threading.get_ident() == caller:
+            n += 1
         return orig(conn, command)
 
-    gc.collect()  # JavaObjects freed by earlier tests send no MEMORY_DEL here
     ClientServerConnection.send_command = counted
     try:
         fn()
